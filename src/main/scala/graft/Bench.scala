@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR, one JSON
   * line on stdout. Headline = the operators that dominate cost at scale
   * (shuffle join, hash agg, windows/interpolation, global sort, sketch
@@ -114,20 +112,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // R-parity: IEEE division (0/0 -> NaN, x/0 -> Inf) like the reference,
-      // not ANSI errors (Spark 4 defaults ANSI on)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Logs.quietBoundedWindowWarn()
+    val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Warm up the JVM before timing: first-query cost is dominated by
     // classloading + JIT of the shuffle/codegen/parquet machinery, not by
     // the engine. A small scan+join+agg+window+sort pass over the tiny
@@ -150,7 +135,6 @@ object Bench {
       // warmup that every later one gets for free — same rationale as the
       // shuffle/parquet warmup above, still none of the timed queries'
       // actual work (25 nation comments, not the documents corpus)
-      graft.plans.Sketches.ensureRegistered(spark)
       nation.select(
           graft.functions.TextFns.minhashSignature(
             split(col("n_name"), " "), 3, 64).as("sig"),

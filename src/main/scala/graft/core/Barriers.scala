@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Plan junction barriers for the composed pipelines.
   *
@@ -13,34 +12,26 @@ import org.apache.spark.storage.StorageLevel
   * nodes and analysis time dominates execution. A barrier materializes the
   * junction once and replaces the subtree with a leaf.
   *
-  * The default (`eager`, `localCheckpoint(true)`) was A/B-measured against
-  * `lazy` in r15 on the full pipe_* bench family (same build, same subset,
-  * flag flipped): eager won 1.00x vs 1.08x. The reason is the junctions'
-  * defining property — MULTIPLE consumers. A lazily-marked RDD consumed
-  * twice inside one physical plan is scanned twice BEFORE its blocks are
-  * cached, so both scans recompute the junction concurrently; eager pays
-  * one extra job per junction but guarantees every consumer reads cached
-  * blocks. (Single-consumer loop states — the BPE/graph fixpoint rounds —
-  * are the opposite case and use localCheckpoint(false) directly.) The
-  * eager default has real costs (ADVICE r14): it runs a job at plan
-  * CONSTRUCTION time even if the result is never consumed, and the
-  * checkpointed blocks are NOT fault-tolerant — an executor loss (dynamic
-  * allocation, spot kills) fails the job instead of recomputing.
-  * Deployments trade that off via `spark.graft.planBarrier`:
+  * The junction rule: a frame that several consumers read inside a stage
+  * is a barrier leaf; a frame with one consumer is not barriered at all
+  * (and a stage OUTPUT its caller reads more than once is cached by that
+  * stage instead — see RunWorkflow's CACHE OWNERSHIP note).
   *
-  *  - `eager`   (default): `localCheckpoint(true)` — materialize now,
-  *              lineage cut, fastest multi-consumer reads; not fault-tolerant.
-  *  - `lazy`    : `localCheckpoint(false)` — lineage cut on first action,
-  *              nothing runs at construction; not fault-tolerant.
-  *  - `persist` : `persist(MEMORY_AND_DISK)` — lazy, RECOMPUTABLE on
-  *              executor loss (lineage kept), at the price of re-analyzing
-  *              the full tree per consumer until cached.
-  *  - `off`     : no barrier — pure lazy plans, full pushdown across the
-  *              junction; only viable for single-consumer chains.
+  * A barrier is always eager (`localCheckpoint(true)`). Eager was
+  * A/B-measured against a lazy `localCheckpoint(false)` in r15 on the full
+  * pipe_* bench family (same build, same subset): eager won 1.00x vs
+  * 1.08x. The reason is the junctions' defining property — MULTIPLE
+  * consumers. A lazily-marked RDD consumed twice inside one physical plan
+  * is scanned twice BEFORE its blocks are cached, so both scans recompute
+  * the junction concurrently; eager pays one extra job per junction but
+  * guarantees every consumer reads cached blocks. (Single-consumer loop
+  * states — the BPE/graph fixpoint rounds — are the opposite case and use
+  * localCheckpoint(false) directly.) Eager has real costs (ADVICE r14): it
+  * runs a job at plan CONSTRUCTION time even if the result is never
+  * consumed, and the checkpointed blocks are NOT fault-tolerant — an
+  * executor loss fails the job instead of recomputing.
   */
 object Barriers {
-
-  val ModeKey = "spark.graft.planBarrier"
 
   /** A frame whose logical plan is already a bare checkpoint leaf
     * (LogicalRDD is exactly what localCheckpoint returns). Barriering it
@@ -48,40 +39,25 @@ object Barriers {
     * second set of pinned blocks — pure job-count overhead with no plan
     * truncation left to gain (the composed pipelines double-barriered the
     * deepest vintage leg this way: once at its own junction, once in the
-    * merge's barrierAll).
+    * merge's barrierAll). Every leaf this object makes is already
+    * materialized, so passing one through never defers a job.
     */
   private def alreadyBarriered(df: DataFrame): Boolean =
     df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
 
   def barrier(df: DataFrame): DataFrame =
-    if (alreadyBarriered(df)) df
-    else df.sparkSession.conf.get(ModeKey, "eager") match {
-      case "off"     => df
-      case "lazy"    => df.localCheckpoint(false)
-      case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case _         => df.localCheckpoint(true)
-    }
+    if (alreadyBarriered(df)) df else df.localCheckpoint(true)
 
   /** Barrier a set of INDEPENDENT frames, overlapping their eager
     * materialization jobs (guide §2.6: actions are only sequential because
     * the driver calls them sequentially — submitting the independent
     * checkpoint jobs from a small pool lets each job's task tail be
-    * back-filled by the next job's tasks). Only the `eager` mode runs jobs
-    * at construction, so only it benefits; the other modes fall through to
-    * the sequential (job-free) spelling. Callers must pass frames with NO
-    * data dependency on each other (the vintage legs of a merge).
+    * back-filled by the next job's tasks). 3 jobs in flight is the guide's
+    * sweet spot: enough to fill tails, not enough to thrash the box.
+    * Callers must pass frames with NO data dependency on each other (the
+    * vintage legs of a merge).
     */
-  def barrierAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
-    if (dfs.sizeIs <= 1) dfs.map(barrier)
-    else if (dfs.head.sparkSession.conf.get(ModeKey, "eager") != "eager") dfs.map(barrier)
-    else
-      // 3 jobs in flight is the guide's sweet spot: enough to fill tails,
-      // not enough to thrash the 32-core box. Pools.mapAll drains every
-      // sibling checkpoint job before propagating a failure — a job left
-      // running would race the session's stop() (the r15 driver-side
-      // RejectedExecutionException flake). Already-checkpointed legs pass
-      // through without a redundant copy job.
-      Pools.mapAll(dfs, 3)(df => if (alreadyBarriered(df)) df else df.localCheckpoint(true))
+  def barrierAll(dfs: Seq[DataFrame]): Seq[DataFrame] = Pools.mapAll(dfs, 3)(barrier)
 
   /** `df.planBarrier()` chain syntax for the pipeline modules. */
   implicit class BarrierOps(private val df: DataFrame) extends AnyVal {

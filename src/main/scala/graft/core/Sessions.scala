@@ -2,10 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Standard session factory. local[32] with shuffle partitions matched to
-  * cores (not the 200 default — wrong for local mode and for small SFs; on a
-  * real cluster this would be sized to 2-3x total executor cores). AQE is on
-  * so the runtime can coalesce post-shuffle partitions and handle skew joins.
+/** The one session factory: every main (Smoke, Verify, Bench,
+  * BenchProfile, PlanDump) and the test suites build their session here.
+  * local[cpus] with shuffle partitions matched to cores (not the 200
+  * default — wrong for local mode and for small SFs; on a real cluster this
+  * would be sized to 2-3x total executor cores). AQE is on so the runtime
+  * can coalesce post-shuffle partitions and handle skew joins.
   */
 object Sessions {
   def local(cpus: Int = 32, appName: String = "graft"): SparkSession = {

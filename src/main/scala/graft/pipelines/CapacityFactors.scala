@@ -299,17 +299,10 @@ object CapacityFactors {
       .drop("Category").withColumnRenamed("value", "Capacity")
     val joinKeys = Seq("scenario", "scenario_geography", "units", "ald_sector",
       "technology", "year")
-    var cf = capacity.join(generation, joinKeys, "full_outer")
-      .withColumn("capacity_factor", col("Generation") / col("Capacity"))
-    cf = cf
-      .withColumn("capacity_factor",
-        when(col("capacity_factor") > 1, 1.0).otherwise(col("capacity_factor")))
-      .withColumn("capacity_factor",
-        when(col("Capacity") === 0 && col("Generation") > 0, 0.0)
-          .otherwise(col("capacity_factor")))
-      .withColumn("capacity_factor",
-        when(col("Capacity") === 0 && col("Generation") === 0, 0.0)
-          .otherwise(col("capacity_factor")))
+    // column resolution is case-insensitive: the guard's capacity and
+    // generation resolve to Capacity and Generation
+    val cf = boundCapacityFactor(capacity.join(generation, joinKeys, "full_outer")
+      .withColumn("capacity_factor", col("Generation") / col("Capacity")))
     cf.drop("Capacity", "Generation", "units", "ald_sector")
       .withColumn("year", col("year").cast("int"))
       .filter(col("year") >= startYear)

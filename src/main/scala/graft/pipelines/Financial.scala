@@ -206,10 +206,9 @@ object Financial {
       .filter(col("company_id").isNotNull)
       // junction: the three attachAverages tiers + two anti probes re-read it
       .planBarrier()
-    // cache before the mid-pipeline check: the assertion action populates
-    // the cache the downstream plan then reads, so the subtree executes
-    // once instead of once per consumer (DataChecks scaladoc pattern)
-    val withAvg = attachAverages(all, srAvg, sAvg, gAvg).cache()
+    // junction: the not-null check and the `fin` chain below both read it
+    // — barrier before the check so neither re-runs the tiered attach
+    val withAvg = attachAverages(all, srAvg, sAvg, gAvg).planBarrier()
     DataChecks.assertAll(withAvg, Seq(DataChecks.notNullCheck(indicators.map(i => s"avg_$i"))))
 
     // reference :348-441 select_final_financial_value_using_averages,
@@ -262,8 +261,9 @@ object Financial {
       out = out.drop(averageTypes.map(t => s"indicator_type_${ff}_$t"): _*)
     }
 
-    // reference :600-603 — nothing may be null; cached so the assertion
-    // action materializes the frame the caller consumes
+    // reference :600-603 — nothing may be null. The stage output is cached
+    // (its caller reads it more than once), so the assertion action
+    // materializes the frame the caller consumes
     out = out.cache()
     DataChecks.assertAll(out, Seq(DataChecks.notNullCheck(out.columns.toSeq)))
     out

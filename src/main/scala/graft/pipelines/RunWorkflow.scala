@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Full-batch orchestrator — the Spark twin of data-raw/run_workflow.R's
   * sequential script. Each stage is a pure function over DataFrames; the
-  * orchestrator wires them in reference order and caches the frames that
-  * are consumed by more than one downstream stage (SURVEY §4.1: branch
-  * reuse is free in eager R but recomputes the subtree in lazy Spark).
+  * orchestrator wires them in reference order. It materializes nothing
+  * itself: the stages own their junctions and outputs (see the CACHE
+  * OWNERSHIP note on [[Outputs]]).
   */
 object RunWorkflow {
 
@@ -67,14 +67,22 @@ object RunWorkflow {
       financialFeatures: DataFrame,
       ngfsCarbonPrice: DataFrame)
 
-  /** CACHE OWNERSHIP: `run()` caches three intermediates (the merged
-    * scenario frame, the regrouped bench geographies and abcd) because
-    * several outputs derive from each; those cached partitions stay pinned
+  /** CACHE OWNERSHIP — one junction rule for every stage (SURVEY §4.1:
+    * branch reuse is free in eager R but recomputes the subtree in lazy
+    * Spark):
+    *  - a frame that several consumers read INSIDE a stage is an eager
+    *    [[graft.core.Barriers.barrier]] checkpoint leaf (a frame with one
+    *    consumer is neither barriered nor cached);
+    *  - a stage OUTPUT that its caller reads more than once is cached by
+    *    that stage, and `run()` lists it in `cachedFrames`.
+    * `run()` itself calls neither. Its cached stage outputs are the merged
+    * scenario frame, abcd and the prepared financials; they stay pinned
     * for the session so the CALLER can still consume every output without
     * recomputation. A long-lived session running the workflow repeatedly
-    * must call [[Outputs.unpersistAll]] after its writes, or the caches
-    * accumulate until memory pressure (this is the leak RunWorkflowSpec's
-    * clearCache() was papering over).
+    * must call [[Outputs.unpersistAll]] after its writes, which releases
+    * every cache entry the run registered. Checkpoint leaves are not cache
+    * entries; the context cleaner drops their blocks once they are
+    * unreachable.
     */
   final case class Outputs(
       carbonPrice: DataFrame,
@@ -87,11 +95,11 @@ object RunWorkflow {
       // usethis::use_data(scenarios_geographies) at run_rename_geographies.R:203)
       scenariosGeographies: Option[DataFrame] = None,
       triskV2: Option[TriskV2] = None,
-      // the exact frames run() cached (outputs may be plans DERIVED from
+      // the exact cached stage outputs (outputs may be plans DERIVED from
       // them, whose own unpersist() would not release these entries)
       private[pipelines] val cachedFrames: Seq[DataFrame] = Nil) {
 
-    /** Release every cache `run()` pinned for this invocation (the frames
+    /** Release every cache entry this invocation registered (the frames
       * remain valid — they just recompute if read again).
       */
     def unpersistAll(): this.type = {
@@ -223,13 +231,6 @@ object RunWorkflow {
   }
 
   def run(spark: SparkSession, in: Inputs): Outputs = {
-    // stage 1 of run_workflow.R: the multi-vintage scenario merge
-    // (data-raw/run_prepare_Scenarios_AnalysisInput.R) when the per-vintage
-    // raw frames are supplied
-    // consumed by the automotive-price fan-out, the alignment rewrite AND
-    // the caller's write — cache, or each consumer re-runs the full
-    // multi-vintage merge (SURVEY §4.1: branch reuse is free in eager R,
-    // recomputes the subtree in lazy Spark)
     // stages 1-4 of run_workflow.R are mutually independent up to the
     // automotive-price append (the scenario merge, the capacity-factor
     // merge and the price merge read disjoint inputs), yet each runs its
@@ -238,11 +239,12 @@ object RunWorkflow {
     // (guide §2.6) so each stage's construction jobs back-fill the
     // previous stage's task tails. Results and order are unchanged.
     val stageThunks: Seq[() => Any] = Seq(
-      // stage 1: the multi-vintage scenario merge; consumed by the
-      // automotive-price fan-out, the alignment rewrite AND the caller's
-      // write — cache, or each consumer re-runs the full merge
-      () => in.scenarios.map(s =>
-        ScenarioData.prepareScenariosAnalysisInput(s, in.startYear).cache()),
+      // stage 1 of run_workflow.R: the multi-vintage scenario merge
+      // (data-raw/run_prepare_Scenarios_AnalysisInput.R) when the
+      // per-vintage raw frames are supplied; the stage caches its output,
+      // which the automotive-price fan-out, the alignment rewrite AND the
+      // caller's write all read
+      () => in.scenarios.map(ScenarioData.prepareScenariosAnalysisInput(_, in.startYear)),
       // stage 3: capacity factors. junction (r15): with vintages present,
       // the WEO2021 frame feeds BOTH its own merge leg and the OXF2021
       // derivation — barrier it once so the two legs read a leaf instead
@@ -309,7 +311,7 @@ object RunWorkflow {
       pricesOut = renamed(1)
       carbonPriceOut = renamed(2)
       if (scenariosOut.isDefined) scenariosOut = Some(renamed(3))
-      benchOut.cache() // consumed by the v2 reshape below and the caller's write
+      benchOut // a checkpoint leaf: the v2 reshape and the caller read it
     }
 
     // stage 6 of run_workflow.R (:39-72): align the scenario, price and
@@ -324,10 +326,10 @@ object RunWorkflow {
       capacityFactorsOut = alignedCf
     }
 
-    // stage 7: abcd — consumed by the financial stage AND the v2 assets
-    // reshape -> cache
+    // stage 7: abcd (cached by its stage) — read by the financial stage,
+    // the v2 assets reshape AND the caller's write
     val abcd = Abcd.prepareAbcdData(in.companyActivities, in.companyEmissions,
-      in.startYear, in.timeHorizon, Nil, in.sectorList).cache()
+      in.startYear, in.timeHorizon, Nil, in.sectorList)
 
     // stage 8: financials (isin -> company when an ids table is present)
     val financialInput = in.companyIds
@@ -335,10 +337,12 @@ object RunWorkflow {
       .getOrElse(in.eikonFinancials)
     val companies = in.companyActivities
       .select("company_id", "ald_sector", "ald_location").distinct()
-    var financial = Financial.prepareFinancialData(spark, financialInput, companies,
+    // the stage caches its prepared output; the restricted frame derives
+    // from that entry, so the entry itself is what cachedFrames lists
+    val preparedFinancial = Financial.prepareFinancialData(spark, financialInput, companies,
       in.ownershipTree, minimumSampleSize = 50, minimumRatioSample = 1.0 / 3,
       allowedRangeNpm = (Double.NegativeInfinity, Double.PositiveInfinity))
-    financial = Financial.restrictToAbcdCompanies(financial, abcd)
+    val financial = Financial.restrictToAbcdCompanies(preparedFinancial, abcd)
 
     // stage 9 of run_workflow.R (:98-272): reshape the aligned st_inputs
     // into the TRISK-v2 frames; needs the scenario set (join spine) and the
@@ -354,7 +358,6 @@ object RunWorkflow {
 
     Outputs(carbonPriceOut, capacityFactorsOut, pricesOut, abcd, financial,
       scenariosOut, scenariosGeographies, triskV2,
-      cachedFrames = Seq(abcd) ++ scenariosAnalysisInput.toSeq ++
-        scenariosGeographies.toSeq)
+      cachedFrames = Seq(abcd, preparedFinancial) ++ scenariosAnalysisInput.toSeq)
   }
 }

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.core.DataChecks
 import graft.core.Barriers.BarrierOps
 
@@ -58,14 +59,14 @@ object Workflow {
     // frame here is dimension-scale (scenario pathways), so the filters
     // can never skip meaningful IO at any table size. The engine's own
     // bloom sidecars serve the fact-table point-lookup cases explicitly.
-    val sess = scenarioData.sparkSession
-    val bfKey = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-    val bfPrev = sess.conf.getOption(bfKey)
-    sess.conf.set(bfKey, "false")
-    val avail =
-      try availableScenarioGeographies(scenarioData, priceData, capacityFactors)
-        .planBarrier()
-      finally bfPrev.fold(sess.conf.unset(bfKey))(sess.conf.set(bfKey, _))
+    // The override lives in a clone of the session conf that only this
+    // thread sees while the barrier plans and runs its plan: the session
+    // conf is never written, so no concurrent query loses its filters.
+    val noBloom = scenarioData.sparkSession.sessionState.conf.clone()
+    noBloom.setConf(SQLConf.RUNTIME_BLOOM_FILTER_ENABLED, false)
+    val avail = SQLConf.withExistingConf(noBloom) {
+      availableScenarioGeographies(scenarioData, priceData, capacityFactors).planBarrier()
+    }
     // broadcast the perimeter (guide §3.1): `avail` is a few hundred
     // (scenario, geography) pairs at any table size, but as a barrier
     // leaf its stats read unknown-huge and the static plan shuffled all
@@ -87,11 +88,13 @@ object Workflow {
       .withColumn("plant_age_years", lit(null).cast("double"))
       .withColumn("workforce_size", lit(null).cast("double"))
       .withColumn("technology", col("ald_business_unit"))
-      // junction barrier (the Abcd.scala:108 treatment): the frame feeds
-      // the asset-id distinct + join-back AND the capacity window — without
-      // it the whole upstream abcd DAG re-analyzes per consumer
-      .planBarrier()
     if (!assets.columns.contains("asset_id")) {
+      // junction barrier (the Abcd.scala:108 treatment): id synthesis gives
+      // the frame two consumers, the asset-id distinct AND the join-back —
+      // without it the whole upstream abcd DAG re-analyzes per consumer.
+      // A frame that already carries asset_id feeds only the capacity
+      // window, so it stays unbarriered.
+      assets = assets.planBarrier()
       val ids = assets.select("company_id", "technology", "country_iso2").distinct()
         .withColumn("asset_id", concat_ws("_", col("company_id").cast("string"),
           row_number().over(Window.partitionBy(col("company_id"))

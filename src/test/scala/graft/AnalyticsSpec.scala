@@ -538,9 +538,7 @@ class AnalyticsSpec extends SparkTestBase {
     // shuffle-free but wouldn't prove bucketing engaged)
     graft.SparkEntry.queries("j19_bucketed_cojoin")(spark, sfDir).collect()
     val suffix = graft.core.Tables.pathKey(sfDir)
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table(s"graft_j19_li_$suffix")
         .join(spark.table(s"graft_j19_ord_$suffix"),
           col("l_orderkey") === col("o_orderkey"))
@@ -555,6 +553,6 @@ class AnalyticsSpec extends SparkTestBase {
         s"bucketed join must not re-shuffle its inputs:\n$p")
       assert(p.contains("SelectedBucketsCount") || p.contains("Bucketed: true"),
         s"scan must report bucketed read:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+    }
   }
 }

@@ -134,9 +134,7 @@ class DedupSpec extends SparkTestBase {
     Dedup.saveMinhashIndexBucketed(corpus, "doc_id", "text", "graft_test_mh_idx", numBuckets = 8)
     // force shuffle joins: at fixture size broadcast would mask the
     // bucketing (at corpus scale the index never broadcasts)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val bucketed = Dedup.probeMinhashIndexBucketed(batch, "graft_test_mh_idx", "doc_id", "text")
       val plain = Dedup.incrementalNearDupPairs(batch,
         Dedup.minhashIndex(corpus, "doc_id", "text"), "doc_id", "text")
@@ -149,10 +147,7 @@ class DedupSpec extends SparkTestBase {
       val exB = "Exchange".r.findAllIn(bucketed.queryExecution.executedPlan.toString).size
       val exP = "Exchange".r.findAllIn(plain.queryExecution.executedPlan.toString).size
       assert(exB == exP - 1, s"bucketed probe has $exB exchanges vs $exP unbucketed")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS graft_test_mh_idx")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS graft_test_mh_idx")
   }
 
   test("canonicalize propagates min id across duplicate chains") {

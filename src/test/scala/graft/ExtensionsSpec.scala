@@ -66,8 +66,7 @@ class ExtensionsSpec extends SparkTestBase {
     // one row per active day — this pin fails if a refactor silently moves
     // the cumsum onto raw events/users (AQE off so the executed plan stays
     // structurally traversable and metrics attach to the real nodes)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val df = SparkEntry.queries("ev_user_growth")(spark, sfDir)
       val out = df.collect()
       val exec = df.queryExecution.executedPlan
@@ -85,7 +84,7 @@ class ExtensionsSpec extends SparkTestBase {
         "the window's input must be the day-level aggregate (one row per day)")
       val nEvents = graft.core.Tables.events(spark, sfDir).count()
       assert(nDays < nEvents / 10, "fixture sanity: days must be far fewer than events")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("dropPartitionsBelow: drops only old partitions, survivors byte-stable") {

@@ -179,16 +179,12 @@ class PlanSpec extends SparkTestBase {
     // shuffle input at run time. Pin that the rule fires on our session
     // config (it is the 100-TB defense for selective non-broadcast joins),
     // and that the filter is semantically a no-op.
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevT = spark.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // fixture scans are far below the 10 GB default application-side
     // threshold, so drop it — at the real scale this test stands in for,
     // the default would already pass
-    spark.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    try {
+    withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       def q = {
         val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
         val ord = Tables.orders(spark, sfDir)
@@ -200,15 +196,11 @@ class PlanSpec extends SparkTestBase {
       assert(p.contains("might_contain"),
         s"runtime bloom filter should be injected on the fact side:\n$p")
       val withFilter = q.count()
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      val without = try q.count()
-      finally spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      val without = withConf("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+        q.count()
+      }
       assert(withFilter == without && withFilter > 0,
         s"bloom pruning must not change results: $withFilter vs $without")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", prevT)
     }
   }
 }

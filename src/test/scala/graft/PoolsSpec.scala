@@ -1,6 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,5 +50,44 @@ class PoolsSpec extends AnyFunSuite {
       }
     }
     assert(e.getMessage === "fail-2")
+  }
+
+  test("mapAll cancels its tasks and keeps the interrupt flag when the caller is interrupted") {
+    val started = new CountDownLatch(2)
+    val cancelled = new CountDownLatch(2)
+    val thrown = new AtomicReference[Throwable]()
+    val flagAfter = new AtomicBoolean(false)
+    val caller = new Thread(() =>
+      try Pools.mapAll(Seq(1, 2), 2) { i =>
+        started.countDown()
+        try { Thread.sleep(30000); i }
+        catch { case e: InterruptedException => cancelled.countDown(); throw e }
+      } catch {
+        case t: Throwable =>
+          thrown.set(t)
+          flagAfter.set(Thread.currentThread().isInterrupted)
+      })
+    caller.start()
+    assert(started.await(10, TimeUnit.SECONDS), "tasks never started")
+    caller.interrupt()
+    caller.join(10000)
+    assert(!caller.isAlive, "mapAll kept blocking after the interrupt")
+    assert(thrown.get().isInstanceOf[InterruptedException], s"got ${thrown.get()}")
+    assert(flagAfter.get(), "interrupt flag was not restored")
+    assert(cancelled.await(10, TimeUnit.SECONDS), "running tasks were not cancelled")
+  }
+
+  test("mapAll rethrows a fatal error at once instead of draining its siblings") {
+    val t0 = System.nanoTime()
+    // the fatal task is SECOND in input order, behind a 30-s sibling
+    val e = intercept[OutOfMemoryError] {
+      Pools.mapAll(Seq(1, 2), 2) { i =>
+        if (i == 2) { Thread.sleep(50); throw new OutOfMemoryError("fatal-2") }
+        Thread.sleep(30000)
+        i
+      }
+    }
+    assert(e.getMessage === "fatal-2")
+    assert((System.nanoTime() - t0) / 1e9 < 10, "the fatal error waited for its sibling")
   }
 }

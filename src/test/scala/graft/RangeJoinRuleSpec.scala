@@ -12,12 +12,8 @@ class RangeJoinRuleSpec extends SparkTestBase {
 
   private def withRule[T](bucketSize: Double)(body: => T): T = {
     spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
-    spark.conf.set(RangeJoinRewrite.BucketSizeKey, bucketSize.toString)
-    try body
-    finally {
-      spark.conf.set(RangeJoinRewrite.BucketSizeKey, "0")
-      spark.experimental.extraOptimizations = Nil
-    }
+    try withConf(RangeJoinRewrite.BucketSizeKey -> bucketSize.toString)(body)
+    finally spark.experimental.extraOptimizations = Nil
   }
 
   private val points = Seq((1, 5.0), (2, 10.0), (3, 27.5), (4, 100.0)).toDF("id", "v")

@@ -27,15 +27,28 @@ import graft.pipelines.{RealData, RunWorkflow, Workflow}
   * Running the prepares IS half the gate already: every pipeline carries the
   * reference's stops as DataChecks that throw on violation mid-plan.
   */
-class RealDataSpec extends SparkTestBase {
+class RealDataSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
 
-  private lazy val outputs: RunWorkflow.Outputs = {
-    // real-data scale in a shared 8g test JVM: leave broadcasts to the
-    // pipelines' explicit small-dim hints; a planner-chosen broadcast of a
-    // misestimated intermediate OOMs the driver here
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    RunWorkflow.run(spark, RealData.loadInputs(spark))
+  // real-data scale in a shared 8g test JVM: leave broadcasts to the
+  // pipelines' explicit small-dim hints; a planner-chosen broadcast of a
+  // misestimated intermediate OOMs the driver here. Set for the whole
+  // suite and put back in afterAll, which runs even when the data load
+  // throws — the plan-pinning suites that follow need the stock threshold.
+  private val broadcastKey = "spark.sql.autoBroadcastJoinThreshold"
+  private var priorBroadcast: Option[String] = None
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    priorBroadcast = spark.conf.getAll.get(broadcastKey)
+    spark.conf.set(broadcastKey, "-1")
   }
+
+  override def afterAll(): Unit =
+    try priorBroadcast.fold(spark.conf.unset(broadcastKey))(spark.conf.set(broadcastKey, _))
+    finally super.afterAll()
+
+  private lazy val outputs: RunWorkflow.Outputs =
+    RunWorkflow.run(spark, RealData.loadInputs(spark))
 
   private def noNulls(df: DataFrame, cols: Seq[String]): Long =
     df.filter(cols.map(col(_).isNull).reduce(_ || _)).count()
@@ -202,10 +215,6 @@ class RealDataSpec extends SparkTestBase {
 
   test("real data: release the workflow caches") {
     outputs.unpersistAll()
-    // restore the session default for the suites that run after this one
-    // (sbt runs forked suites sequentially; plan-pinning specs depend on
-    // the stock broadcast threshold)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
     assert(true)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipelines.RunWorkflow
 
@@ -220,22 +221,25 @@ class RunWorkflowSpec extends SparkTestBase with org.scalatest.BeforeAndAfterEac
     pChecked.assertClean()
   }
 
+  /** Every stage that feeds the TRISK-v2 frames: scenarios, bench regions,
+    * an ownership tree. */
+  private def v2Inputs = RunWorkflow.Inputs(
+    ngfsCarbonPriceWide = ngfsWide,
+    weoCapacityFactorsWide = weoWide,
+    fossilFuelPricesWide = fossilWide,
+    powerLcoeWide = powerWide,
+    companyActivities = SyntheticData.companyActivities(spark, nCompanies = 15),
+    companyEmissions = SyntheticData.companyEmissions(spark, nCompanies = 15),
+    eikonFinancials = SyntheticData.eikonFinancials(spark, nCompanies = 15),
+    companyIds = None,
+    ownershipTree = Some(SyntheticData.ownershipTree(spark, nCompanies = 15)),
+    scenarios = Some(graft.pipelines.ScenarioData.ScenarioInputs(
+      geco2023 = Some(gecoAutomotive.withColumn("source", lit("GECO2023"))))),
+    benchRegions = Some(benchRegions),
+    startYear = 2022, timeHorizon = 5)
+
   test("run with scenarios + bench regions: TRISK-v2 frames materialize") {
-    val activities = SyntheticData.companyActivities(spark, nCompanies = 15)
-    val out = RunWorkflow.run(spark, RunWorkflow.Inputs(
-      ngfsCarbonPriceWide = ngfsWide,
-      weoCapacityFactorsWide = weoWide,
-      fossilFuelPricesWide = fossilWide,
-      powerLcoeWide = powerWide,
-      companyActivities = activities,
-      companyEmissions = SyntheticData.companyEmissions(spark, nCompanies = 15),
-      eikonFinancials = SyntheticData.eikonFinancials(spark, nCompanies = 15),
-      companyIds = None,
-      ownershipTree = Some(SyntheticData.ownershipTree(spark, nCompanies = 15)),
-      scenarios = Some(graft.pipelines.ScenarioData.ScenarioInputs(
-        geco2023 = Some(gecoAutomotive.withColumn("source", lit("GECO2023"))))),
-      benchRegions = Some(benchRegions),
-      startYear = 2022, timeHorizon = 5))
+    val out = RunWorkflow.run(spark, v2Inputs)
 
     val v2 = out.triskV2.get
     // assets.csv contract: 15 pinned columns (run_workflow.R:160-170)
@@ -275,5 +279,44 @@ class RunWorkflowSpec extends SparkTestBase with org.scalatest.BeforeAndAfterEac
     assert(out.abcd.storageLevel == StorageLevel.NONE)
     assert(out.scenariosGeographies.get.storageLevel == StorageLevel.NONE)
     assert(v2.ngfsCarbonPrice.count() > 0) // still computable post-release
+  }
+
+  test("unpersistAll releases every cache entry the run registered") {
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val out = RunWorkflow.run(spark, v2Inputs)
+    out.triskV2.get.financialFeatures.write.format("noop").mode("overwrite").save()
+    assert(!cacheManager.isEmpty, "run() should cache its multiply-read stage outputs")
+    out.unpersistAll()
+    assert(cacheManager.isEmpty, "a cache entry of the run outlived unpersistAll()")
+  }
+
+  test("run leaves the session conf exactly as it found it") {
+    // no stage writes session conf: a per-plan override (the alignment
+    // stage's bloom-filter switch, pinned in WorkflowSpec) must stay
+    // scoped to its plan, or it leaks into every later query. The run goes
+    // to a fresh session, whose conf no earlier run in this JVM has
+    // touched — a leak already present would hide a new one.
+    val fresh = spark.newSession()
+    def own(df: DataFrame): DataFrame = fresh.createDataFrame(df.rdd, df.schema)
+    val in = v2Inputs
+    val freshIn = in.copy(
+      ngfsCarbonPriceWide = own(in.ngfsCarbonPriceWide),
+      weoCapacityFactorsWide = own(in.weoCapacityFactorsWide),
+      fossilFuelPricesWide = own(in.fossilFuelPricesWide),
+      powerLcoeWide = own(in.powerLcoeWide),
+      companyActivities = own(in.companyActivities),
+      companyEmissions = own(in.companyEmissions),
+      eikonFinancials = own(in.eikonFinancials),
+      ownershipTree = in.ownershipTree.map(own),
+      scenarios = in.scenarios.map(s => s.copy(geco2023 = s.geco2023.map(own))),
+      benchRegions = in.benchRegions.map(own))
+    val before = fresh.conf.getAll
+    val out = RunWorkflow.run(fresh, freshIn)
+    out.triskV2.get.scenarios.write.format("noop").mode("overwrite").save()
+    val after = fresh.conf.getAll
+    val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+    assert(changed.isEmpty, s"run() changed session conf: " +
+      changed.map(k => s"$k: ${before.get(k)} -> ${after.get(k)}").mkString(", "))
   }
 }

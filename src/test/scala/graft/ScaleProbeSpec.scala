@@ -219,9 +219,7 @@ class ScaleProbeSpec extends SparkTestBase {
   }
 
   test("dd_incr_near: bucketed-index probe keeps the batch-side-only shuffle at 10x") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val batchN = 2000L
       // batch: half exact copies of corpus docs (same generator), half
       // novel (disjoint "b-" hash namespace)
@@ -264,7 +262,6 @@ class ScaleProbeSpec extends SparkTestBase {
       // the corpus, the shuffle does not — gate at linear with slack
       assertLinear("dd_incr_near probe", tSmall, tBig)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS graft_scale_mh_small")
       spark.sql("DROP TABLE IF EXISTS graft_scale_mh_big")
     }
@@ -307,12 +304,10 @@ class ScaleProbeSpec extends SparkTestBase {
     // grows (that is AQE doing its job), so compare exchange counts with
     // auto-broadcast off — the underlying shuffle skeleton must not
     // change with data size
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       assert(exchanges(chunks(nDocs)) == exchanges(chunks(nDocs * 10)),
         "cdc-chunk plan changed shape at 10x")
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
     assertLinear("dd_cdc_chunk", tSmall, tBig)
   }
 

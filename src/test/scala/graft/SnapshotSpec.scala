@@ -95,20 +95,17 @@ class SnapshotSpec extends SparkTestBase {
     // carry over past it — it fails loudly after the wait budget instead
     // of making the claimant's eventual commit invisible at head
     fs(root).createNewFile(new Path(f"$root/_manifests/v${v2 + 1}%012d.claim"))
-    spark.conf.set("graft.snapshots.claimWaitMs", "200")
-    try {
+    withConf("graft.snapshots.claimWaitMs" -> "200") {
       intercept[java.util.ConcurrentModificationException](
         Snapshots.publishPartitions(spark, root)(stage =>
           fixture("a" -> 3).write.partitionBy("part").parquet(stage)))
       // once the claim is STALE (owner declared dead), publishes resume
       // and skip over the dead number
-      spark.conf.set("graft.snapshots.staleClaimMs", "0")
-      val v4 = Snapshots.publishPartitions(spark, root)(stage =>
-        fixture("a" -> 3).write.partitionBy("part").parquet(stage))
-      assert(v4 == v2 + 2, "the stale claim must be skipped")
-    } finally {
-      spark.conf.unset("graft.snapshots.claimWaitMs")
-      spark.conf.unset("graft.snapshots.staleClaimMs")
+      withConf("graft.snapshots.staleClaimMs" -> "0") {
+        val v4 = Snapshots.publishPartitions(spark, root)(stage =>
+          fixture("a" -> 3).write.partitionBy("part").parquet(stage))
+        assert(v4 == v2 + 2, "the stale claim must be skipped")
+      }
     }
     val v4 = v2 + 2
     val pinned = rowsOf(Snapshots.readSnapshot(spark, root, Some(v2)))
@@ -128,8 +125,7 @@ class SnapshotSpec extends SparkTestBase {
     // writer A claims v2 and stalls past the stale threshold; writer B
     // then publishes (carrying over past the stale claim, committing v3)
     fs(root).createNewFile(new Path(f"$root/_manifests/v${2L}%012d.claim"))
-    spark.conf.set("graft.snapshots.staleClaimMs", "0")
-    try {
+    withConf("graft.snapshots.staleClaimMs" -> "0") {
       val vb = Snapshots.publishPartitions(spark, root)(stage =>
         fixture("b" -> 2).write.partitionBy("part").parquet(stage))
       assert(vb == 3L)
@@ -151,7 +147,7 @@ class SnapshotSpec extends SparkTestBase {
         .getLines().toList
       assert(lines.exists(_.startsWith("#prev=1")),
         s"v3 must carry over from v1 past the stale claim, got: ${lines.filter(_.startsWith("#"))}")
-    } finally spark.conf.unset("graft.snapshots.staleClaimMs")
+    }
   }
 
   test("a refused commit releases its claim: RMW verbs retry instead of wedging") {
@@ -463,9 +459,9 @@ class SnapshotSpec extends SparkTestBase {
     // the default must INHERIT a session-level mergeSchema=true, not
     // override it with an explicit false (the pre-existing deployment
     // contract of plain parquet readers)
-    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
-    try assert(Snapshots.readSnapshot(spark, root).columns.contains("extra"))
-    finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
+      assert(Snapshots.readSnapshot(spark, root).columns.contains("extra"))
+    }
   }
 
   test("rollbackTo: refuses loudly past the vacuum retention horizon") {

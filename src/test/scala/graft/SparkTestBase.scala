@@ -9,24 +9,26 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `body` with the given session conf values set, then put every key
+    * back in `finally`: its prior value if it had one, unset if it had
+    * none. The session is shared by every suite, so a value left behind by
+    * a failing test would change the plans of the suites that follow.
+    */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    // getAll holds only the explicitly set keys; getOption would report a
+    // default as a prior value and the restore would pin it
+    val explicit = spark.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> explicit.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // R-parity: IEEE division (0/0 -> NaN, x/0 -> Inf) like the reference,
-      // not ANSI errors (Spark 4 defaults ANSI on)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.core.Logs.quietBoundedWindowWarn()
-    graft.plans.Sketches.ensureRegistered(s)
-    s
-  }
+  lazy val session: SparkSession = graft.core.Sessions.local(4, "graft-test")
 }

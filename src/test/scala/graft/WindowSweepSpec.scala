@@ -54,9 +54,7 @@ class WindowSweepSpec extends SparkTestBase {
 
   test("no catalog entry runs an unbounded partition-less window") {
     // AQE off so the executed plan stays structurally traversable
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         try {
           val bad = offendingWindows(fn(spark, sfDir))
@@ -67,32 +65,28 @@ class WindowSweepSpec extends SparkTestBase {
         }
       }
       assert(offenders.isEmpty, offenders.mkString("\n"))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("the sweep DOES flag a global window over a raw table (checker self-test)") {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       import org.apache.spark.sql.expressions.Window
       val bad = graft.core.Tables.lineitem(spark, sfDir)
         .withColumn("rn", row_number().over(Window.orderBy(col("l_orderkey"))))
       assert(offendingWindows(bad).nonEmpty,
         "checker failed to flag a single-reducer window over the raw table")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("the sweep DOES flag a constant-key (lit-disguised) global window") {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val bad = graft.core.Tables.lineitem(spark, sfDir)
         .withColumn("rn", row_number().over(
           graft.ops.Windows.boundedGlobal(col("l_orderkey"))))
       assert(offendingWindows(bad).nonEmpty,
         "checker failed to flag a lit(0)-partitioned single-reducer window " +
           "over the raw table")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("the sweep DOES flag a global window over a barriered frame (r13 hole)") {
@@ -101,15 +95,13 @@ class WindowSweepSpec extends SparkTestBase {
     // placed OVER a lineage barrier slipped the police. The barrier does
     // not bound cardinality — at 100 TB the checkpointed frame is still
     // 100 TB.
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       import org.apache.spark.sql.expressions.Window
       val bad = graft.core.Tables.nation(spark, sfDir)
         .localCheckpoint(true)
         .withColumn("rn", row_number().over(Window.orderBy(col("n_nationkey"))))
       assert(offendingWindows(bad).nonEmpty,
         "checker failed to flag a single-reducer window over a localCheckpoint barrier")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 }

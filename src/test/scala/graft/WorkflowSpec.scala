@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.pipelines.{Geographies, Workflow}
 
 class WorkflowSpec extends SparkTestBase {
@@ -62,6 +69,53 @@ class WorkflowSpec extends SparkTestBase {
     assert(s.count() == 2)
     assert(s.filter(col("scenario_geography") === "Mars").count() == 0)
     assert(p.count() == 2 && c.count() == 1)
+  }
+
+  test("alignDatasets keeps runtime bloom filters out of the perimeter plan") {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        ()
+    }
+    // listener events arrive asynchronously
+    def awaitPlans(n: Int): Seq[String] = {
+      val deadline = System.nanoTime() + 20e9.toLong
+      while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(20)
+      plans.asScala.toSeq
+    }
+    def hasBloom(p: String) = p.contains("might_contain") || p.contains("bloom_filter_agg")
+    // the injection rule prunes file scans only: serve the fixtures from
+    // parquet
+    val dir = java.nio.file.Files.createTempDirectory("graft-align").toString
+    def onDisk(df: DataFrame, name: String) = {
+      df.write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val (scenarioData, priceData, capfac) = (onDisk(this.scenarioData, "scen"),
+      onDisk(this.priceData, "price"), onDisk(this.capfac, "capfac"))
+    // fixture frames are far below the 10 GB application-side threshold
+    // and would broadcast; lift both so the injection rule can fire
+    withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
+      spark.listenerManager.register(listener)
+      try {
+        // control: the same perimeter plan under the session conf does
+        // carry a runtime bloom filter
+        Workflow.availableScenarioGeographies(scenarioData, priceData, capfac)
+          .localCheckpoint(true)
+        val control = awaitPlans(1)
+        assert(control.size == 1 && hasBloom(control.head),
+          s"control plan should carry a runtime bloom filter:\n${control.mkString("\n")}")
+        val (s, _, _) = Workflow.alignDatasets(scenarioData, priceData, capfac)
+        val avail = awaitPlans(2).drop(1)
+        assert(avail.size == 1, s"expected the one avail barrier, got ${avail.size}")
+        assert(!hasBloom(avail.head), s"avail plan carries a bloom filter:\n${avail.head}")
+        assert(s.count() == 2)
+      } finally spark.listenerManager.unregister(listener)
+    }
   }
 
   test("triskV2Scenarios reshapes with capfac default 1 and provider prefix") {
