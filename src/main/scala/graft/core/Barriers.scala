@@ -15,7 +15,10 @@ import org.apache.spark.sql.DataFrame
   * The junction rule: a frame that several consumers read inside a stage
   * is a barrier leaf; a frame with one consumer is not barriered at all
   * (and a stage OUTPUT its caller reads more than once is cached by that
-  * stage instead — see RunWorkflow's CACHE OWNERSHIP note).
+  * stage instead — see RunWorkflow's CACHE OWNERSHIP note). A fan-out —
+  * rows duplicated under new labels — is one generator
+  * ([[graft.ops.Reshape.fanOut]]) over its input, not a junction: spell it
+  * as a filter → relabel → union clone and the input gains a consumer.
   *
   * A barrier is always eager (`localCheckpoint(true)`). Eager was
   * A/B-measured against a lazy `localCheckpoint(false)` in r15 on the full

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Column-set checks are plan-only (free). Value checks are actions — each
   * one executes the plan, so pipelines should checkpoint/cache before a
-  * cluster-scale check, or use [[checkExpr]] to fold the assertion into the
-  * plan as a side-effect-free filter count.
+  * cluster-scale check, fold several checks into one aggregate pass with
+  * [[assertAll]], or ride the pipeline's own action at no extra job with
+  * [[observeChecks]].
   */
 object DataChecks {
   final case class CheckFailed(msg: String) extends RuntimeException(msg)

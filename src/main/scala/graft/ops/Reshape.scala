@@ -33,12 +33,17 @@ object Reshape {
       .pivot(nameCol, labels)
       .agg(first(valueCol, ignoreNulls = true))
 
-  /** U5: "duplicate slice under new label" — filter a subset, relabel a
-    * column, union back (reference R/prepare_prewrangled_capacity_factors.R:
-    * 225-237 clones SDS rows as NZE2050).
+  /** U5: "duplicate slice under new label" as one generator (reference
+    * R/prepare_prewrangled_capacity_factors.R:225-237 clones SDS rows as
+    * NZE2050) — the 1→N sibling of [[recodeValues]]. A row whose `c` is a
+    * key of `copies` is emitted once per listed label (list the key itself
+    * to keep the original row; an empty list drops the row); an unmapped
+    * value or a null passes through unchanged. One pass over `df`, so the
+    * input has a single consumer — unlike a filter → relabel → union clone,
+    * which reads it twice.
     */
-  def relabelSlice(df: DataFrame, pred: Column, labelCol: String, newLabel: String): DataFrame =
-    df.unionByName(df.filter(pred).withColumn(labelCol, lit(newLabel)))
+  def fanOut(df: DataFrame, c: String, copies: Map[String, Seq[String]]): DataFrame =
+    df.withColumn(c, explode(coalesce(element_at(typedLit(copies), col(c)), array(col(c)))))
 
   /** P14/P10: recode values through a small dict; unmapped values pass
     * through (reference R/helpers.R:156-168 rename_column_values). A map

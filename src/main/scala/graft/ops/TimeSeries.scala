@@ -188,6 +188,13 @@ object TimeSeries {
     * with naApprox's exact formula and casts, grid-only rows carry the
     * interpolated (or null) value; null-x input rows pass through
     * verbatim (they match no grid row in the relational spelling either).
+    *
+    * Tie rule (pinned by TimeSeriesSpec): when a null value shares its
+    * (key, x) with a non-null sibling, the null takes the line through the
+    * nearest non-null observations strictly before and strictly after x —
+    * never the sibling. [[naApprox]]'s running windows may pick the same-x
+    * sibling instead, depending on the order of the tied rows; R's
+    * `approx(ties = mean)` would return the siblings' mean.
     */
   private def completeFromObservations(
       df: DataFrame, agged: DataFrame, keys: Seq[String], x: String, v: String,

@@ -101,16 +101,13 @@ object CapacityFactors {
     DataChecks.assertBetween(cf, "capacity_factor", 0.0, 1.0)
 
     cf = cf.select("scenario", "scenario_geography", "technology", "year", "capacity_factor")
-      // junction: the two relabelSlice clones below each re-read the frame
-      // (slice + union base), stacking the interpolation subtree 4x
-      .planBarrier()
 
     // reference :213-237 — scenario prefix + relabel slices (U5)
     cf = cf.withColumn("scenario", concat_ws("_", lit("WEO2021"), col("scenario")))
     cf = Reshape.recodeValues(cf, "scenario", Map("WEO2021_SPS" -> "WEO2021_STEPS"))
-    cf = Reshape.relabelSlice(cf, col("scenario") === "WEO2021_SDS", "scenario", "WEO2021_NZE_2050")
-    cf = Reshape.relabelSlice(cf, col("scenario") === "WEO2021_STEPS", "scenario", "WEO2021_APS")
-    cf
+    Reshape.fanOut(cf, "scenario", Map(
+      "WEO2021_SDS" -> Seq("WEO2021_SDS", "WEO2021_NZE_2050"),
+      "WEO2021_STEPS" -> Seq("WEO2021_STEPS", "WEO2021_APS")))
   }
 
   /** The NGFS capacity-factor guard cascade (reference
@@ -353,23 +350,14 @@ object CapacityFactors {
       data: DataFrame,
       startYear: Int,
       maxYear: Int = 2050): DataFrame = {
-    var d = data
+    // recode + fan-outs in one pass; a null technology has no steel route
+    // (the final isin drops it), so it stays out of the grid as well
+    val bof = Seq("BOF", "BF-BOF")
+    var d = Reshape.fanOut(data.filter(col("technology").isNotNull), "technology", Map(
+        "EAF Steel" -> Seq("BF-EAF", "EAF"), "DRI" -> Seq("DRI-EAF", "DRI-BOF"),
+        "BOF Steel" -> bof, "BOF" -> bof, "OHF Steel" -> Seq("OHF Steel", "BF-OHF")))
       .withColumn("scenario_geography", lit("Global"))
-      .withColumn("technology",
-        when(col("technology") === "BOF Steel", "BOF").otherwise(col("technology")))
-      // junction: d feeds six technology fan-out slices AND the union base
-      .planBarrier()
-    def slice(from: String, to: String) =
-      d.filter(col("technology") === from).withColumn("technology", lit(to))
-    d = d.filter(!col("technology").isin("EAF Steel", "DRI"))
-      .unionByName(slice("EAF Steel", "BF-EAF"))
-      .unionByName(slice("EAF Steel", "EAF"))
-      .unionByName(slice("DRI", "DRI-EAF"))
-      .unionByName(slice("BOF", "BF-BOF"))
-      .unionByName(slice("DRI", "DRI-BOF"))
-      .unionByName(slice("OHF Steel", "BF-OHF"))
-    d = d.withColumn("scenario", lit("Steel_baseline"))
-      .unionByName(d.withColumn("scenario", lit("Steel_NZ")))
+      .withColumn("scenario", explode(array(lit("Steel_baseline"), lit("Steel_NZ"))))
     d = TimeSeries.completeGrid(
       d, Seq("technology", "scenario", "scenario_geography"), "year", startYear, maxYear)
     // :866-869 — nulls take the group's first (lowest-year) non-null value

@@ -98,14 +98,9 @@ object Prices {
       .withColumn("sector", lit("Power"))
       .groupBy((keyCols :+ "year").map(col): _*)
       .agg(avg(col("price")).as("price")) // multiple wind/solar rows -> one
-      // junction: the aggregate feeds the placeholder slice AND the union
-      .planBarrier()
     // placeholder OilCap/HydroCap from GasCap/RenewablesCap (reference :144-158)
-    val placeholders = power
-      .filter(col("technology").isin("GasCap", "RenewablesCap"))
-      .withColumn("technology",
-        when(col("technology") === "GasCap", "OilCap").otherwise("HydroCap"))
-    power = power.unionByName(placeholders)
+    power = Reshape.fanOut(power, "technology", Map(
+      "GasCap" -> Seq("GasCap", "OilCap"), "RenewablesCap" -> Seq("RenewablesCap", "HydroCap")))
     power = TimeSeries.fillDown(power, keyCols.filterNot(_ == "year"), "year", "price", "price")
       // junction: the filled frame feeds the Global aggregate AND the union
       .planBarrier()
@@ -413,19 +408,18 @@ object Prices {
       .select(col("__scenario").as("scenario"), col("scenario_geography"),
         col("Sector").as("sector"), col("technology"), col("unit"),
         col("Year").as("year"), col("LCOE").as("price"))
-      // junction: d feeds the OilCap clone, the RenewablesCap collapse AND
-      // the complement filter — three consumers
-      .planBarrier()
+      // null technologies are dropped, as the `!=` complement filter drops NA
+      .filter(col("technology").isNotNull)
     // :119-132 — OilCap clone + RenewablesCap mean-collapse (window mean +
-    // distinct mirrors the reference's grouped mutate + unique)
-    val oilCap = d.filter(col("technology") === "GasCap")
-      .withColumn("technology", lit("OilCap"))
+    // distinct mirrors the reference's grouped mutate + unique); wRenew is
+    // keyed on technology, so the collapse touches only RenewablesCap rows
     val wRenew = Window.partitionBy(col("scenario"), col("scenario_geography"),
       col("sector"), col("year"), col("technology"))
-    val renew = d.filter(col("technology") === "RenewablesCap")
-      .withColumn("price", avg(col("price")).over(wRenew)).distinct()
-    d = d.filter(col("technology") =!= "RenewablesCap")
-      .unionByName(renew).unionByName(oilCap).distinct()
+    d = Reshape.fanOut(d, "technology", Map("GasCap" -> Seq("GasCap", "OilCap")))
+      .withColumn("price",
+        when(col("technology") === "RenewablesCap", avg(col("price")).over(wRenew))
+          .otherwise(col("price")))
+      .distinct()
     d = impliedPriceAdjust(d,
       Seq("scenario", "scenario_geography", "sector", "technology", "unit"),
       averageNpmPower, startYear)
@@ -465,12 +459,8 @@ object Prices {
       .select(input.columns.map(col): _*)
       .unionByName(
         unadjusted.filter(!(col("sector") === "Power" && col("indicator") === "LCOE")))
-      .filter(col("scenario_geography") === "Global")
-    val sds = adjusted.filter(col("scenario") === "SDS")
-      // junction: the SDS slice is duplicated under two labels
-      .planBarrier()
-    sds.withColumn("scenario", lit("IPR2023_FPS"))
-      .unionByName(sds.withColumn("scenario", lit("IPR2023_RPS")))
+      .filter(col("scenario_geography") === "Global" && col("scenario") === "SDS")
+    Reshape.fanOut(adjusted, "scenario", Map("SDS" -> Seq("IPR2023_FPS", "IPR2023_RPS")))
   }
 
   /** reference :333-385 MP_LC_steel_wrangling: Global = mean over regions,
@@ -482,23 +472,17 @@ object Prices {
       .groupBy("scenario", "year", "technology")
       .agg(avg(col("levelized_cost")).as("levelized_cost"))
       .withColumn("region", lit("Global"))
-    var d = data.unionByName(globalAgg.select(data.columns.map(col): _*))
+    val d = data.unionByName(globalAgg.select(data.columns.map(col): _*))
       .withColumnRenamed("levelized_cost", "price")
       .withColumnRenamed("region", "scenario_geography")
       .filter(col("technology").isin("Avg BF-BOF", "DRI-Melt-BOF", "EAF", "DRI-EAF"))
       .filter(col("scenario").isin("baseline", "carbon_cost"))
-      .withColumn("technology",
-        when(col("technology") === "Avg BF-BOF", "BF-BOF")
-          .when(col("technology") === "DRI-Melt-BOF", "DRI-BOF")
-          .otherwise(col("technology")))
-      // junction: d feeds three technology fan-out slices AND the union base
-      .planBarrier()
-    def slice(from: String, to: String) =
-      d.filter(col("technology") === from).withColumn("technology", lit(to))
-    d = d.unionByName(slice("EAF", "BF-EAF"))
-      .unionByName(slice("BF-BOF", "BOF"))
-      .unionByName(slice("BF-BOF", "BF-OHF"))
-    d.withColumn("sector", lit("Steel"))
+    // recode + fan-outs in one pass: Avg BF-BOF→{BF-BOF, BOF, BF-OHF},
+    // DRI-Melt-BOF→DRI-BOF, EAF→{EAF, BF-EAF}
+    Reshape.fanOut(d, "technology", Map(
+        "Avg BF-BOF" -> Seq("BF-BOF", "BOF", "BF-OHF"), "DRI-Melt-BOF" -> Seq("DRI-BOF"),
+        "EAF" -> Seq("EAF", "BF-EAF")))
+      .withColumn("sector", lit("Steel"))
       .withColumn("indicator", lit("Levelized Cost"))
       .withColumn("source", lit("Mission Possible"))
       .withColumn("unit", lit("$/ton"))
@@ -543,32 +527,19 @@ object Prices {
   }
 
   /** reference R/prepare_LCOE_adjusted_price_data.R:225-252 — fan Oxford
-    * transition paths out to NGFS (model x scenario) labels (R9 as a
-    * crossJoin, not a pivot_longer of label columns).
+    * transition paths out to NGFS (model x scenario) labels and relabel the
+    * Oxford paths themselves, as one static map per vintage (R9 as a
+    * generator, not a pivot_longer of label columns). Slow-transition rows
+    * and null scenarios are dropped; the scenario column moves last.
     */
-  def fanOutNgfsScenarios(pricesAdjustedIn: DataFrame, ngfsVintage: String): DataFrame = {
-    // junction: the adjusted frame feeds the fast slice, the slow slice AND
-    // the Oxford relabel — three consumers
-    val pricesAdjusted = pricesAdjustedIn.planBarrier()
-    val spark = pricesAdjusted.sparkSession
-    import spark.implicits._
-    val models = Seq("GCAM", "REMIND", "MESSAGE").toDF("model")
-    def slice(oxfordScenario: String, ngfsScenarios: Seq[String]): DataFrame =
-      pricesAdjusted.filter(col("scenario") === oxfordScenario).drop("scenario")
-        .crossJoin(broadcast(models))
-        .crossJoin(broadcast(ngfsScenarios.toDF("ngfs_scenario")))
-    val fast = slice("fast_transition_oxford", Seq("NZ2050", "LD", "B2DS", "DT"))
-    val slow = slice("no_transition_oxford", Seq("NDC", "FW", "CP"))
-    val ngfs = fast.unionByName(slow)
-      .withColumn("scenario",
-        concat(lit(s"NGFS$ngfsVintage"), col("model"), lit("_"), col("ngfs_scenario")))
-      .drop("model", "ngfs_scenario")
-    val oxford = pricesAdjusted
-      .withColumn("scenario",
-        when(col("scenario") === "fast_transition_oxford", "Oxford2021_fast")
-          .when(col("scenario") === "no_transition_oxford", "Oxford2021_base")
-          .otherwise(col("scenario")))
-      .filter(col("scenario") =!= "slow_transition_oxford")
-    ngfs.unionByName(oxford.select(ngfs.columns.map(col): _*))
+  def fanOutNgfsScenarios(pricesAdjusted: DataFrame, ngfsVintage: String): DataFrame = {
+    def ngfs(scenarios: String*) = for {
+      model <- Seq("GCAM", "REMIND", "MESSAGE"); s <- scenarios
+    } yield s"NGFS$ngfsVintage${model}_$s"
+    val out = Reshape.fanOut(pricesAdjusted.filter(col("scenario").isNotNull), "scenario", Map(
+      "fast_transition_oxford" -> (ngfs("NZ2050", "LD", "B2DS", "DT") :+ "Oxford2021_fast"),
+      "no_transition_oxford" -> (ngfs("NDC", "FW", "CP") :+ "Oxford2021_base"),
+      "slow_transition_oxford" -> Nil))
+    out.select((out.columns.filterNot(_ == "scenario") :+ "scenario").map(col): _*)
   }
 }

@@ -72,7 +72,9 @@ object RunWorkflow {
     * Spark):
     *  - a frame that several consumers read INSIDE a stage is an eager
     *    [[graft.core.Barriers.barrier]] checkpoint leaf (a frame with one
-    *    consumer is neither barriered nor cached);
+    *    consumer is neither barriered nor cached; a fan-out is one
+    *    [[graft.ops.Reshape.fanOut]] generator, so its input has one
+    *    consumer and is not a junction);
     *  - a stage OUTPUT that its caller reads more than once is cached by
     *    that stage, and `run()` lists it in `cachedFrames`.
     * `run()` itself calls neither. Its cached stage outputs are the merged
@@ -138,15 +140,13 @@ object RunWorkflow {
   private def mergeCapacityFactorVintages(
       cfWeo2021: DataFrame, v: VintageInputs, startYear: Int): DataFrame = {
     val ipr = v.ipr2023CapacityFactors.map { raw =>
-      import graft.core.Barriers.BarrierOps
       val p = CapacityFactors.prepareCapacityFactorsIpr2023(raw, startYear)
         .filter(col("scenario_geography") =!= "IND") // :143 duplicated India geography
-        // junction (r15): the baseline clone below re-reads the prepared
-        // frame — barrier once instead of running the IPR prepare twice
-        .planBarrier()
       // :146 full_join(prepared, baseline) — a natural full join of
-      // equal-schema frames with disjoint scenario labels = union-dedup (J5)
-      p.unionByName(CapacityFactors.prepareCapacityFactorsIpr2023Baseline(p)).distinct()
+      // equal-schema frames with disjoint scenario labels = union-dedup (J5);
+      // the baseline is IPR2023_FPS relabelled (:770-777)
+      graft.ops.Reshape.fanOut(p, "scenario",
+        Map("IPR2023_FPS" -> Seq("IPR2023_FPS", "IPR2023_baseline"))).distinct()
     }
     bindRows(Seq(
       Some(cfWeo2021),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Barriers.BarrierOps
 import graft.core.DataChecks
-import graft.ops.{Shares, TimeSeries}
+import graft.ops.{Reshape, Shares, TimeSeries}
 
 /** Scenario-data helpers — Spark re-expression of the exported reference
   * functions `interpolate_yearly` and `add_market_share_columns`
@@ -496,9 +496,7 @@ object ScenarioData {
     d = d.withColumn("year", col("year").cast("int")).filter(col("year") >= startYear)
     d = addSharesWithUnits(d)
     // :912-917 — OilCap mirrors GasCap including its tmsr/smsp
-    val oilCap = d.filter(col("technology") === "GasCap")
-      .withColumn("technology", lit("OilCap"))
-    d = oilCap.unionByName(d)
+    d = Reshape.fanOut(d, "technology", Map("GasCap" -> Seq("OilCap", "GasCap")))
     val greenTechs =
       Seq("RenewablesCap", "HydroCap", "NuclearCap", "SolarCap", "WindCap", "BiomassCap")
     d.withColumn("direction",
@@ -528,13 +526,10 @@ object ScenarioData {
     d = TimeSeries.completeCross(d, Seq("scenario", "technology"), "year", startYear, maxYear)
       .withColumn("scenario_geography", lit("Global"))
       .withColumn("sector", lit("Steel"))
-      .withColumn("technology",
-        when(col("technology") === "Avg BF-BOF", "BF-BOF")
-          .when(col("technology") === "DRI-Melt-BOF", "DRI-BOF")
-          .otherwise(col("technology")))
-    // :969-975 — EAF duplicated as BF-EAF
-    d = d.unionByName(
-      d.filter(col("technology") === "EAF").withColumn("technology", lit("BF-EAF")))
+    // recode + :969-975 EAF duplicated as BF-EAF, in one pass
+    d = Reshape.fanOut(d, "technology", Map(
+      "Avg BF-BOF" -> Seq("BF-BOF"), "DRI-Melt-BOF" -> Seq("DRI-BOF"),
+      "EAF" -> Seq("EAF", "BF-EAF")))
     // :983-1001 — trailing nulls (after the last observation) become 0;
     // R's max(year[!is.na]) over an all-NA group is -Inf, so all-null
     // groups zero out entirely — zeroAfterLastObs matches both branches
@@ -552,10 +547,7 @@ object ScenarioData {
           .otherwise(col("value")))
       .drop("__value_2026")
     // :1026-1038 — BF-BOF duplicated as BOF and BF-OHF
-    val bfBof = d.filter(col("technology") === "BF-BOF")
-    d = d
-      .unionByName(bfBof.withColumn("technology", lit("BOF")))
-      .unionByName(bfBof.withColumn("technology", lit("BF-OHF")))
+    d = Reshape.fanOut(d, "technology", Map("BF-BOF" -> Seq("BF-BOF", "BOF", "BF-OHF")))
     // :1044-1046 — common fair-share groups (scenario, sector, geography)
     d = addMarketShareColumns(d.filter(col("year") >= startYear), startYear)
     d.withColumn("direction", lit("declining"))

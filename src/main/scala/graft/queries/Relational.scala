@@ -1107,8 +1107,8 @@ object Relational {
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, d) =>
       // U5: duplicate-slice-under-new-label (R/prepare_prewrangled_
       // capacity_factors.R:225-237, SDS cloned as NZE2050).
-      Reshape.relabelSlice(orders(s, d).select("o_orderstatus"),
-          col("o_orderstatus") === "P", "o_orderstatus", "PENDING_COPY")
+      Reshape.fanOut(orders(s, d).select("o_orderstatus"),
+          "o_orderstatus", Map("P" -> Seq("P", "PENDING_COPY")))
         .groupBy("o_orderstatus").agg(count(lit(1)).as("n")).orderBy("o_orderstatus")
     },
 

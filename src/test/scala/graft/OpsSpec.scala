@@ -301,11 +301,20 @@ class OpsSpec extends SparkTestBase {
     assert(out.toSeq == Seq((2022, 1.0), (2023, 2.0)))
   }
 
-  test("relabelSlice clones the matching slice under the new label (U5)") {
-    val df = Seq(("SDS", 1.0), ("APS", 2.0)).toDF("scenario", "v")
-    val out = Reshape.relabelSlice(df, col("scenario") === "SDS", "scenario", "NZE2050")
-    assert(out.count() == 3)
-    assert(out.filter(col("scenario") === "NZE2050").count() == 1)
+  test("fanOut emits one row per listed label in one pass over its input (U5)") {
+    val df = Seq[(String, Double)](("SDS", 1.0), ("SPS", 2.0), ("slow", 3.0), ("APS", 4.0),
+      (null, 5.0)).toDF("scenario", "v")
+    val out = Reshape.fanOut(df, "scenario", Map(
+      "SDS" -> Seq("SDS", "NZE2050"),   // original kept + a copy
+      "SPS" -> Seq("STEPS", "APS"),     // original dropped, two copies
+      "slow" -> Nil))                   // empty list drops the row
+    val got = out.as[(Option[String], Double)].collect().toSeq
+      .sortBy { case (s, v) => (v, s.getOrElse("")) }
+    assert(got == Seq(Some("NZE2050") -> 1.0, Some("SDS") -> 1.0, Some("APS") -> 2.0,
+      Some("STEPS") -> 2.0, Some("APS") -> 4.0, None -> 5.0)) // unmapped + null pass through
+    assert(out.columns.toSeq == df.columns.toSeq)
+    val reads = out.queryExecution.analyzed.collectLeaves()
+    assert(reads.size == 1, s"fanOut must read its input once:\n${out.queryExecution.analyzed}")
   }
 
   test("DataChecks: bounds + uniqueness + no-null fail fast") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Shares
-import graft.pipelines.{AssetImpact, Prices}
+import graft.pipelines.{AssetImpact, CapacityFactors, Prices}
 
 /** Physical-plan pins for the pipeline layer (VERDICT: extend PlanSpec to
   * the pipelines) — shuffle counts and broadcast shapes that would regress
@@ -15,6 +15,22 @@ class PipelinePlanSpec extends SparkTestBase {
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
   private def exchanges(df: DataFrame): Int =
     "Exchange hashpartitioning".r.findAllIn(plan(df)).size
+
+  test("steel fan-outs build without a checkpoint leaf (one generator, no junction)") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val lc = Seq(("baseline", "Europe", "Avg BF-BOF", 2025, 500.0),
+        ("baseline", "Europe", "EAF", 2025, 400.0))
+      .toDF("scenario", "region", "technology", "year", "levelized_cost")
+    val gem = Seq(("BOF Steel", 2027, 0.7), ("EAF Steel", 2027, 0.6), ("DRI", 2027, 0.5))
+      .toDF("technology", "year", "value")
+    for ((name, df) <- Seq(
+        "mpLcSteelWrangling" -> Prices.mpLcSteelWrangling(lc),
+        "prepareCapacityFactorsGemSteel" ->
+          CapacityFactors.prepareCapacityFactorsGemSteel(gem, 2025, 2030))) {
+      val leaves = df.queryExecution.logical.collectLeaves().filter(_.isInstanceOf[LogicalRDD])
+      assert(leaves.isEmpty, s"$name built a checkpoint leaf:\n${df.queryExecution.logical}")
+    }
+  }
 
   test("market-share chain (tmsr+smsp) costs exactly its two partitionings") {
     val df = Seq(

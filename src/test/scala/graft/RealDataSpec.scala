@@ -27,7 +27,7 @@ import graft.pipelines.{RealData, RunWorkflow, Workflow}
   * Running the prepares IS half the gate already: every pipeline carries the
   * reference's stops as DataChecks that throw on violation mid-plan.
   */
-class RealDataSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
+class RealDataSpec extends SparkTestBase {
 
   // real-data scale in a shared 8g test JVM: leave broadcasts to the
   // pipelines' explicit small-dim hints; a planner-chosen broadcast of a

@@ -136,4 +136,17 @@ class TimeSeriesSpec extends SparkTestBase {
     val r = relational.collect().map(key).sortBy(identity)
     assert(f.toSeq == r.toSeq)
   }
+
+  test("fused interpolation tie rule: a null beside a same-x non-null sibling skips it") {
+    // (a, 2022) holds a null AND 5.0: the null takes the line through the
+    // nearest non-null observations strictly before and after 2022 —
+    // (2020, 1.0) and (2024, 3.0) — so 2.0, not the sibling's 5.0; the
+    // grid-only years 2021/2023 do use the sibling as an anchor
+    val df = ts(("a", 2020, 1.0), ("a", 2022, null), ("a", 2022, 5.0), ("a", 2024, 3.0))
+    val want = Seq((2020, 1.0), (2021, 3.0), (2022, 2.0), (2022, 5.0), (2023, 4.0), (2024, 3.0))
+    for (out <- Seq(TimeSeries.completeInterpolateLocal(df, Seq("k"), "x", "v"),
+        TimeSeries.completeInterpolateGlobalRange(df, Seq("k"), "x", "v"))) {
+      assert(out.select("x", "v").as[(Int, Double)].collect().toSeq.sorted == want)
+    }
+  }
 }
