@@ -331,6 +331,14 @@ object Similarity {
   private val ivfIndexCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]]()
 
+  /** The memoised entry for index `path`, built on a miss or when the
+    * directory is gone (a tmpdir cleaner): a stale entry fails every probe. */
+  private def liveIndex[V](cache: java.util.concurrent.ConcurrentHashMap[String, V],
+      path: String)(build: => V): V = {
+    if (!new java.io.File(path).exists()) cache.remove(path)
+    cache.computeIfAbsent(path, _ => build)
+  }
+
   // trained quantization models (PQ codebooks, SQ8 ranges) already derived
   // by THIS JVM, keyed by corpus fingerprint + training params — the
   // self-contained entries re-run their scan per call (that's what they
@@ -380,8 +388,8 @@ object Similarity {
       .digest(s"$cacheKey|$fingerprint|$nCells|$trainIters".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val path = System.getProperty("java.io.tmpdir") + s"/graft_ivf_idx_$digest"
-    val cents = ivfIndexCache.computeIfAbsent(path,
-      _ => buildIvfIndex(df, id, vec, path, nCells, trainIters))
+    val cents = liveIndex(ivfIndexCache, path)(
+      buildIvfIndex(df, id, vec, path, nCells, trainIters))
     (path, cents)
   }
 
@@ -605,11 +613,11 @@ object Similarity {
       .digest(s"append|$cacheKey|$fingerprint|$batchKey|$nCells|$trainIters".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val path = System.getProperty("java.io.tmpdir") + s"/graft_ivf_app_idx_$digest"
-    val cents = ivfIndexCache.computeIfAbsent(path, _ => {
+    val cents = liveIndex(ivfIndexCache, path) {
       val c = buildIvfIndex(base, id, vec, path, nCells, trainIters)
       appendToIvfIndex(batch, id, vec, path, c)
       c
-    })
+    }
     (path, cents)
   }
 
@@ -1146,8 +1154,8 @@ object Similarity {
       .digest(s"sq8|$cacheKey|$fingerprint|$nCells|$trainIters".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val path = System.getProperty("java.io.tmpdir") + s"/graft_ivf_sq8_idx_$digest"
-    val (cents, stats) = ivfSq8IndexCache.computeIfAbsent(path,
-      _ => buildIvfSq8Index(df, id, vec, path, nCells, trainIters))
+    val (cents, stats) = liveIndex(ivfSq8IndexCache, path)(
+      buildIvfSq8Index(df, id, vec, path, nCells, trainIters))
     (path, cents, stats)
   }
 

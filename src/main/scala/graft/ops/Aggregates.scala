@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 
 /** Aggregation operators (SURVEY §2.4). All compose built-in hash aggregates
@@ -20,6 +21,10 @@ object Aggregates {
     */
   def allNullOrZero(c: Column): Column =
     (count(c) === 0) || (sum(c) === 0)
+
+  /** [[allNullOrZero]] over a window: flags every row of an empty group. */
+  def allNullOrZero(c: Column, w: WindowSpec): Column =
+    (count(c).over(w) === 0) || (sum(c).over(w) === 0)
 
   /** A3: exact linear-interpolated median, matching R's stats::median default
     * (reference R/prepare_prewrangled_financial_data_stress_test.R:61-108

@@ -227,19 +227,6 @@ object Joins {
       .select("g_x", "g_y", "overlap")
   }
 
-  /** Anti join that treats null keys as equal — dplyr::anti_join matches NA
-    * to NA (reference drop_always_empty_production anti-joins on keys that
-    * can be NA, R/prepare_abcd_stress_test_input.R:230-234); Spark's
-    * left_anti with plain equality would keep every null-keyed row.
-    */
-  def antiJoinNullSafe(df: DataFrame, other: DataFrame, keys: Seq[String]): DataFrame = {
-    // rename the probe side to avoid ambiguous self-join resolution when
-    // `other` derives from `df`
-    val b = keys.foldLeft(other.select(keys.map(col): _*))(
-      (d, k) => d.withColumnRenamed(k, s"__b_$k"))
-    df.join(b, keys.map(k => col(k) <=> col(s"__b_$k")).reduce(_ && _), "left_anti")
-  }
-
   /** P12 deterministic: dropDuplicates picks an arbitrary row; at scale (and
     * for oracle parity) pin the survivor with an explicit order.
     */

@@ -5,12 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.DataChecks
 import graft.ops.{Aggregates, Reshape, TimeSeries}
-import graft.core.Barriers.BarrierOps
 
 /** ABCD stress-test input pipeline — the Spark re-expression of
   * `prepare_abcd_data` (reference R/prepare_abcd_stress_test_input.R:
-  * 339-426). One lazy plan end-to-end; the group keys stay on the
-  * (company_id, sector, business_unit, location, unit) prefix throughout,
+  * 339-426). One lazy plan end-to-end: the sector filter sits at the wide
+  * inputs and later steps are windows, not self-joins, so no frame has two
+  * consumers and the cached output is the one pin. The group keys stay on
+  * the (company_id, sector, business_unit, location, unit) prefix throughout,
   * so the complete -> interpolate -> fill chain and the aggregations reuse
   * a consistent partitioning.
   *
@@ -62,11 +63,16 @@ object Abcd {
       additionalYears: Seq[Int] = Nil,
       sectorList: Seq[String]): DataFrame = {
 
+    // reference :303-307 sector filter, at the input: every key set below
+    // holds ald_sector (merge, groupAllExcept, nesting, fill, MW/MWh,
+    // (sector, bu) EF fill, empty-key), so no dropped row meets a kept one
+    val inSectors = col("ald_sector").isin(sectorList: _*)
+
     // reference :348-357
-    val activities = unpivotAndAggregate(companyActivities)
+    val activities = unpivotAndAggregate(companyActivities.filter(inSectors))
       .withColumnRenamed("activity_unit", "ald_production_unit")
       .withColumnRenamed("equity_ownership", "ald_production")
-    val emissions = unpivotAndAggregate(companyEmissions)
+    val emissions = unpivotAndAggregate(companyEmissions.filter(inSectors))
       .withColumnRenamed("activity_unit", "emissions_factor_unit")
       .withColumnRenamed("equity_ownership", "emissions_factor")
 
@@ -104,72 +110,74 @@ object Abcd {
         when(col("emissions_factor_unit").isNotNull,
           concat_ws("/", col("emissions_factor_unit"), col("ald_production_unit")))
           .otherwise("unknown"))
-    // JUNCTION BARRIER (SURVEY §7.4 pt 7): from here the frame fans out
-    // into mwProd + mwhEmis + the non-MW/MWh filter — three consumers,
-    // each of which the later stages reference again. Without a LINEAGE
-    // barrier the final output's logical tree contains ~36 copies of
-    // everything above this line (measured: 9-42 s of pure Catalyst time
-    // per run on a 1.3k-row fixture; .cache() does NOT help — the tree
-    // still carries the full subtree and CacheManager canonicalization
-    // walks it per consumer). localCheckpoint truncates the plan to a
-    // materialized leaf: downstream analysis/optimization see a scan. At
-    // 100 TB the same math holds harder — one extra pass over the data
-    // beats recomputing the fill chain per branch (swap for a reliable
-    // checkpoint() on clusters where executor loss must be survivable).
-    abcd = abcd.planBarrier()
-    // MW production matched to MWh-derived emission factors (reference :193-207)
-    val mwProd = abcd.filter(col("ald_production_unit") === "MW")
-      .drop("emissions_factor_unit", "emissions_factor").distinct()
-    val mwhEmis = abcd.filter(col("ald_production_unit") === "MWh")
-      .drop("ald_production_unit", "ald_production").distinct()
-    val mwJoined = mwProd.join(mwhEmis,
-      Seq("company_id", "company_name", "ald_sector", "ald_business_unit", "ald_location", "year"))
-      .select(abcd.columns.map(col): _*)
-    abcd = abcd.filter(!col("ald_production_unit").isin("MW", "MWh"))
-      .unionByName(mwJoined)
-      // junction: avgEf + missingEf + the not-missing filter all re-read
-      .planBarrier()
+    val columns = abcd.columns.toSeq
+    // the next two steps replace (unit, EF) with each pair a generator yields
+    val efPair = struct(col("emissions_factor_unit"), col("emissions_factor"))
+    def explodeEf(df: DataFrame, pairs: Column): DataFrame = df
+      .withColumn("__ef", pairs)
+      .select(columns.map {
+        case c @ ("emissions_factor_unit" | "emissions_factor") => col(s"__ef.$c").as(c)
+        case c => col(c)
+      }: _*)
 
-    // reference :130-168 fill_missing_emission_factor
-    val avgEf = abcd
-      .groupBy("ald_sector", "ald_business_unit", "emissions_factor_unit")
-      .agg(avg(nanAsNull(col("emissions_factor"))).as("emissions_factor"))
-    val missingEf = abcd.filter(isMissing(col("emissions_factor")))
-      .drop("emissions_factor", "emissions_factor_unit")
-      .join(avgEf, Seq("ald_sector", "ald_business_unit"), "left")
-      .withColumn("emissions_factor", coalesce(nanAsNull(col("emissions_factor")), lit(0.0)))
-    abcd = abcd.filter(!isMissing(col("emissions_factor")))
-      .unionByName(missingEf.select(abcd.columns.map(col): _*))
+    // reference :193-207: each distinct MW row takes every distinct (unit,
+    // EF) of the MWh rows with its merge keys; MWh rows go. As in the
+    // inner join, a null merge key matches nothing; a null unit fails isin.
+    val unit = col("ald_production_unit")
+    val mwh = collect_set(when(unit === "MWh", efPair))
+      .over(Window.partitionBy(mergeKeys.map(col): _*))
+    val firstOfProduction = row_number().over(
+      Window.partitionBy((mergeKeys :+ "ald_production_unit" :+ "ald_production").map(col): _*)
+        .orderBy(col("emissions_factor_unit"))) === 1
+    abcd = explodeEf(
+      abcd.withColumn("__mwh", mwh).withColumn("__first", firstOfProduction)
+        .filter(!unit.isin("MW", "MWh") ||
+          (unit === "MW" && col("__first") && mergeKeys.map(col(_).isNotNull).reduce(_ && _))),
+      explode(when(unit === "MW", col("__mwh")).otherwise(array(efPair))))
+
+    // reference :130-168 fill_missing_emission_factor: a missing EF row
+    // fans out to one copy per EF unit of its (sector, bu), each with that
+    // unit's mean, as the left join did; a null sector or bu gets (null, 0).
+    val bySectorBu = Window.partitionBy(col("ald_sector"), col("ald_business_unit"))
+    val unitMean = avg(nanAsNull(col("emissions_factor"))).over(
+      bySectorBu.orderBy(col("emissions_factor_unit"))
+        .rangeBetween(Window.currentRow, Window.currentRow))
+    val unitMeans = collect_set(
+      struct(col("emissions_factor_unit"), col("__mean").as("emissions_factor"))).over(bySectorBu)
+    abcd = explodeEf(
+      abcd.withColumn("__mean", unitMean).withColumn("__means", unitMeans),
+      explode_outer(when(!isMissing(col("emissions_factor")), array(efPair))
+        .when(col("ald_sector").isNotNull && col("ald_business_unit").isNotNull, col("__means"))))
     abcd = abcd.withColumn("emissions_factor",
-      when(col("ald_production") === 0, 0.0).otherwise(col("emissions_factor")))
-      // junction: emptyKeys probe + anti join + assetIds + final join
-      .planBarrier()
+      when(col("ald_production") === 0, 0.0)
+        .otherwise(coalesce(nanAsNull(col("emissions_factor")), lit(0.0))))
 
-    // reference :216-237 drop keys whose production is all-null-or-zero
-    val emptyKeys = groupAllExcept(abcd, Seq("year", "ald_production", "emissions_factor"))(
-      Seq(Aggregates.allNullOrZero(col("ald_production")).as("__empty")))
-      .filter(col("__empty")).drop("__empty")
-    abcd = graft.ops.Joins.antiJoinNullSafe(abcd, emptyKeys,
-      abcd.columns.filterNot(Seq("year", "ald_production", "emissions_factor").contains).toSeq)
+    // reference :216-237 drop keys whose production is all-null-or-zero; a
+    // window partition groups null keys together, as dplyr's anti_join does
+    val assetKeys = columns.filterNot(Seq("year", "ald_production", "emissions_factor").contains)
+    abcd = abcd
+      .withColumn("__empty", Aggregates.allNullOrZero(col("ald_production"),
+        Window.partitionBy(assetKeys.map(col): _*)))
+      .filter(!col("__empty")).drop("__empty")
 
     abcd = abcd
       .withColumnRenamed("ald_production", "plan_tech_prod")
       .withColumnRenamed("emissions_factor", "plan_emission_factor")
 
-    // reference :303-307, :117-124 filters
-    abcd = abcd.filter(col("ald_sector").isin(sectorList: _*))
+    // reference :117-124 year filter
     val years = (startYear to startYear + timeHorizon) ++ additionalYears
     abcd = abcd.filter(col("year").isin(years: _*))
 
     // reference :309-320 create_asset_id. The reference numbers assets by
     // arrival order (non-deterministic under parallelism, SURVEY §7.4 pt 4);
     // we pin (ald_location, ald_business_unit) — same ids on every run.
-    val assetIds = abcd.select("company_id", "ald_location", "ald_business_unit").distinct()
+    val idKeys = Seq("company_id", "ald_location", "ald_business_unit")
+    abcd = abcd
       .withColumn("asset_id",
         concat_ws("_", col("company_id").cast("string"),
-          row_number().over(Window.partitionBy(col("company_id"))
+          dense_rank().over(Window.partitionBy(col("company_id"))
             .orderBy(col("ald_location"), col("ald_business_unit"))).cast("string")))
-    abcd = abcd.join(assetIds, Seq("company_id", "ald_location", "ald_business_unit"), "right")
+    abcd = abcd.select((idKeys ++ abcd.columns.filterNot(idKeys.contains)).map(col): _*)
 
     abcd = abcd
       .withColumn("scenario_geography", lit("Global"))

@@ -44,7 +44,7 @@ object CapacityFactors {
     d = d.groupBy(grp.map(col): _*)
       .agg(sum(col(yearCols.head)).as(yearCols.head),
         yearCols.tail.map(c => sum(col(c)).as(c)): _*)
-      // JUNCTION BARRIER (the Abcd.scala:108 treatment): the aggregate
+      // JUNCTION BARRIER (the Barriers junction rule): the aggregate
       // feeds BOTH indicator slices, and the Capacity/Generation join below
       // therefore carries the whole subtree twice before completeGrid
       // triples it again — one materialization pass collapses all of it.
@@ -305,10 +305,11 @@ object CapacityFactors {
       .filter(col("year") >= startYear)
   }
 
-  /** reference :770-777 — IPR baseline cf = IPR2023_FPS relabelled. */
-  def prepareCapacityFactorsIpr2023Baseline(data: DataFrame): DataFrame =
-    data.filter(col("scenario") === "IPR2023_FPS")
-      .withColumn("scenario", lit("IPR2023_baseline"))
+  /** reference :770-777, run script :146 — the prepared IPR frame full-joined
+    * with its baseline (IPR2023_FPS relabelled): a union-dedup (J5). */
+  def withIpr2023Baseline(data: DataFrame): DataFrame =
+    Reshape.fanOut(data, "scenario",
+      Map("IPR2023_FPS" -> Seq("IPR2023_FPS", "IPR2023_baseline"))).distinct()
 
   /** reference :780-813 prepare_capacity_factors_OXF2021: Oxford publishes
     * no capacity factors — the WEO2021 Global SDS/STEPS factors are

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.DataChecks
@@ -11,8 +11,9 @@ import graft.core.Barriers.BarrierOps
   * data_stress_test.R:528-607).
   *
   * Architecture notes vs the reference:
-  *  - the three average frames (sector x region, sector, global) are tiny
-  *    aggregates -> broadcast joins onto the company table;
+  *  - the three average tiers (sector x region, sector, global) are one
+  *    tiny ROLLUP -> broadcast joins onto the company table, whose avg
+  *    not-null check is observed on the output's own assertion pass;
   *  - the reference's 94-line pivot-long/pivot-wide "choose best value"
   *    (R:348-441) is a per-indicator coalesce + provenance label (same
   *    result, no reshape — SURVEY R3);
@@ -34,19 +35,17 @@ object Financial {
   /** reference :61-108 create_averages_eikon: grouped medians with
     * sample-size gating; groups with any null/infinite median are dropped,
     * and avg_net_profit_margin must fall inside `allowedRangeNpm`.
+    * `extra` aggregates ride along ungated.
     */
   private def averages(
-      df: DataFrame,
-      grpCols: Seq[String],
+      grouped: RelationalGroupedDataset,
       minimumSampleSize: Double,
       minimumRatioSample: Double,
-      allowedRangeNpm: (Double, Double)): DataFrame = {
-    val grouped =
-      if (grpCols.isEmpty) df.groupBy()
-      else df.groupBy(grpCols.map(col): _*)
+      allowedRangeNpm: (Double, Double),
+      extra: Seq[Column] = Nil): DataFrame = {
     val agged = grouped.agg(
       count(lit(1)).cast("double").as("__size_sample"),
-      indicators.map(i => rMedian(col(i)).as(s"avg_$i")): _*)
+      indicators.map(i => rMedian(col(i)).as(s"avg_$i")) ++ extra: _*)
     // as written in the reference, size_subgroup == size_sample (both are
     // the group size), so ratio_sample_subgroup == 1 — reproduced as-is
     val gated = agged
@@ -60,7 +59,8 @@ object Financial {
 
   /** reference :119-133 — tolerance-free aggregation of the indicators. */
   private def aggregateIndicators(df: DataFrame, grpCols: Seq[String]): DataFrame = {
-    val out = averages(df, grpCols, 0, 0, (Double.NegativeInfinity, Double.PositiveInfinity))
+    val out = averages(df.groupBy(grpCols.map(col): _*), 0, 0,
+      (Double.NegativeInfinity, Double.PositiveInfinity))
     indicators.foldLeft(out)((d, i) => d.withColumnRenamed(s"avg_$i", i))
   }
 
@@ -108,31 +108,28 @@ object Financial {
     out
   }
 
-  /** reference :303-339 — tiered attach of the averages (region tier, then
-    * sector tier, then global bind_cols), preserving row count.
+  /** reference :303-339 — each row takes the first `rolled` tier it matches
+    * (grouping id 0 sector x region, 1 sector, 3 global; a tier row with a
+    * null key of its own is dropped, as the per-tier pre-filters did). A row
+    * matching none drops, like bind_cols with an empty global frame.
     */
-  private def attachAverages(
-      df: DataFrame,
-      sectorRegion: DataFrame,
-      sector: DataFrame,
-      global: DataFrame): DataFrame = {
-    // tier membership depends ONLY on the broadcast side's keys (tier1 is
-    // an inner join on (sector, region), so a row misses tier1 iff its
-    // (sector, region) is absent from sectorRegion) — probe the tiny
-    // averages tables directly with broadcast anti-joins instead of
-    // materializing each tier's matched keys and shuffle-anti-joining them
-    // back (r15, guide §3.1: 2 distinct-exchanges + 2 shuffled anti-joins
-    // removed; row sets identical by the inner-join membership argument)
-    val tier1 = df.join(broadcast(sectorRegion), Seq("ald_sector", "ald_region"))
-    val rest1 = df.join(broadcast(sectorRegion.select("ald_sector", "ald_region")),
-      Seq("ald_sector", "ald_region"), "left_anti")
-    val tier2 = rest1.join(broadcast(sector), Seq("ald_sector"))
-    val rest2 = rest1.join(broadcast(sector.select("ald_sector")),
-      Seq("ald_sector"), "left_anti")
-    val tier3 = rest2.crossJoin(broadcast(global))
-    val all = tier1.unionByName(tier2.select(tier1.columns.map(col): _*))
-      .unionByName(tier3.select(tier1.columns.map(col): _*))
-    all
+  private def attachAverages(df: DataFrame, rolled: DataFrame): DataFrame = {
+    val tiers = Seq((0, "bics_subgroup_region", Seq("ald_sector", "ald_region")),
+      (1, "bics_subgroup", Seq("ald_sector")), (3, "global", Nil))
+    val joined = tiers.foldLeft(df) { case (d, (t, label, keys)) =>
+      val side = broadcast(rolled
+        .filter(keys.foldLeft(col("__tier") === t)((c, k) => c && col(k).isNotNull))
+        .select(keys.map(col) ++ (lit(label).as(s"__type$t") +:
+          indicators.map(i => col(s"avg_$i").as(s"__avg${t}_$i"))): _*))
+      if (keys.isEmpty) d.join(side, lit(true), "left") else d.join(side, keys, "left")
+    }
+    def firstMatch(name: Int => String): Column = tiers.map(_._1).tail.foldLeft(
+      when(col("__type0").isNotNull, col(name(0))))(
+      (c, t) => c.when(col(s"__type$t").isNotNull, col(name(t))))
+    val avgs = indicators.map(i => firstMatch(t => s"__avg${t}_$i").as(s"avg_$i"))
+    val label = firstMatch(t => s"__type$t").as("average_type")
+    joined.select(df.columns.map(col) ++ avgs :+ label: _*)
+      .filter(col("average_type").isNotNull)
   }
 
   /** run_prepare_prewrangled_financial_data_stress_test.R:11-18 — attach
@@ -169,10 +166,10 @@ object Financial {
       when(col("net_profit_margin") <= 0 || col("net_profit_margin") > 1, lit(null))
         .otherwise(col("net_profit_margin")))
     // JUNCTION BARRIER (SURVEY §7.4 pt 7): `financial` is re-read by the
-    // missing-company anti join, the parent-values projection, all three
-    // average legs and the final union — six consumers. localCheckpoint
+    // missing-company anti join, the parent tree and values, the averages
+    // rollup and the final union — five consumers. localCheckpoint
     // truncates the lineage so the downstream Catalyst trees carry a leaf
-    // instead of six copies of the median aggregation (and at scale, six
+    // instead of five copies of the median aggregation (and at scale, five
     // scans of the aggregated company table become one materialization).
     financial = financial.planBarrier()
 
@@ -190,30 +187,22 @@ object Financial {
         indicators.foldLeft(missing)((d, i) => d.withColumn(i, lit(null).cast("double")))
     }
 
-    // reference :561-581 — averages from ORIGINAL values only, then attach
-    val srAvg = averages(
-      financial.filter(col("ald_sector").isNotNull && col("ald_region").isNotNull),
-      Seq("ald_sector", "ald_region"), minimumSampleSize, minimumRatioSample, allowedRangeNpm)
-      .withColumn("average_type", lit("bics_subgroup_region"))
-    val sAvg = averages(financial.filter(col("ald_sector").isNotNull),
-      Seq("ald_sector"), minimumSampleSize, minimumRatioSample, allowedRangeNpm)
-      .withColumn("average_type", lit("bics_subgroup"))
-    val gAvg = averages(financial, Nil, minimumSampleSize, minimumRatioSample, allowedRangeNpm)
-      .withColumn("average_type", lit("global"))
+    // reference :561-581 — averages from ORIGINAL values only, all three
+    // tiers in one ROLLUP, then attach
+    val rolled = averages(financial.rollup(col("ald_sector"), col("ald_region")),
+      minimumSampleSize, minimumRatioSample, allowedRangeNpm, Seq(grouping_id().as("__tier")))
 
     val all = financial.unionByName(missing.select(financial.columns.map(col): _*),
         allowMissingColumns = true)
       .filter(col("company_id").isNotNull)
-      // junction: the three attachAverages tiers + two anti probes re-read it
-      .planBarrier()
-    // junction: the not-null check and the `fin` chain below both read it
-    // — barrier before the check so neither re-runs the tiered attach
-    val withAvg = attachAverages(all, srAvg, sAvg, gAvg).planBarrier()
-    DataChecks.assertAll(withAvg, Seq(DataChecks.notNullCheck(indicators.map(i => s"avg_$i"))))
+    // the not-null check rides the final assertAll below, which
+    // materializes the cached output this frame feeds
+    val withAvg = DataChecks.observeChecks(attachAverages(all, rolled),
+      Seq(DataChecks.notNullCheck(indicators.map(i => s"avg_$i"))))
 
     // reference :348-441 select_final_financial_value_using_averages,
     // re-expressed as coalesce + provenance (no pivot round-trip)
-    var fin = withAvg
+    var fin = withAvg.df
     for (i <- indicators) {
       fin = fin.withColumn(s"final_$i", coalesce(col(i), col(s"avg_$i")))
       if (provenanceFeatures.contains(i))
@@ -266,6 +255,7 @@ object Financial {
     // materializes the frame the caller consumes
     out = out.cache()
     DataChecks.assertAll(out, Seq(DataChecks.notNullCheck(out.columns.toSeq)))
+    withAvg.assertClean()
     out
   }
 }

@@ -182,7 +182,7 @@ object Geographies {
       benchRegionsIn: DataFrame,
       triskInputs: Seq[DataFrame],
       matchingTol: Double = 1.0): (DataFrame, Seq[DataFrame]) = {
-    // junction barrier (the Abcd.scala:108 treatment): the bench frame
+    // junction barrier (the Barriers junction rule): the bench frame
     // feeds the uniqueness assert, the overlap grouping AND the newname
     // copy — three consumers of the caller's (possibly deep) plan
     val benchRegions = benchRegionsIn.planBarrier()

@@ -42,7 +42,7 @@ object Prices {
         Map("Crude oil" -> "Oil", "IEA crude oil" -> "Oil", "Natural gas" -> "Gas"))
       .withColumn("sector", when(col("technology") === "Coal", "Coal").otherwise("Oil&Gas"))
       .withColumn("indicator", lit("price"))
-      // JUNCTION BARRIER (the Abcd.scala:108 treatment): fossil fans into
+      // JUNCTION BARRIER (the Barriers junction rule): fossil fans into
       // the Global aggregate AND the union, and the union then enters the
       // complete-grid (which consumes its input three times: range agg,
       // distinct keys, join side) — without a barrier the unpivot subtree

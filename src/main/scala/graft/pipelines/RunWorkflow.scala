@@ -140,13 +140,9 @@ object RunWorkflow {
   private def mergeCapacityFactorVintages(
       cfWeo2021: DataFrame, v: VintageInputs, startYear: Int): DataFrame = {
     val ipr = v.ipr2023CapacityFactors.map { raw =>
-      val p = CapacityFactors.prepareCapacityFactorsIpr2023(raw, startYear)
-        .filter(col("scenario_geography") =!= "IND") // :143 duplicated India geography
-      // :146 full_join(prepared, baseline) — a natural full join of
-      // equal-schema frames with disjoint scenario labels = union-dedup (J5);
-      // the baseline is IPR2023_FPS relabelled (:770-777)
-      graft.ops.Reshape.fanOut(p, "scenario",
-        Map("IPR2023_FPS" -> Seq("IPR2023_FPS", "IPR2023_baseline"))).distinct()
+      CapacityFactors.withIpr2023Baseline(
+        CapacityFactors.prepareCapacityFactorsIpr2023(raw, startYear)
+          .filter(col("scenario_geography") =!= "IND")) // :143 duplicated India geography
     }
     bindRows(Seq(
       Some(cfWeo2021),

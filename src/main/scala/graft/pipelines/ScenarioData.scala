@@ -584,7 +584,7 @@ object ScenarioData {
       d: DataFrame, startYear: Int, greens: Seq[String]): DataFrame =
     formatP4i(
       addMarketShareColumns(
-        // JUNCTION BARRIER (the Abcd.scala:104 treatment): the completion
+        // JUNCTION BARRIER (the Barriers junction rule): the completion
         // grid reads its input twice and every downstream prepare reads
         // ITS result several more times (NA-perimeter anti-join,
         // incomplete-sector prune) — across the 8-vintage merge those

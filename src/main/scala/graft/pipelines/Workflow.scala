@@ -89,7 +89,7 @@ object Workflow {
       .withColumn("workforce_size", lit(null).cast("double"))
       .withColumn("technology", col("ald_business_unit"))
     if (!assets.columns.contains("asset_id")) {
-      // junction barrier (the Abcd.scala:108 treatment): id synthesis gives
+      // junction barrier (the Barriers junction rule): id synthesis gives
       // the frame two consumers, the asset-id distinct AND the join-back —
       // without it the whole upstream abcd DAG re-analyzes per consumer.
       // A frame that already carries asset_id feeds only the capacity

@@ -143,6 +143,30 @@ class AnnRecallSpec extends SparkTestBase {
       "fresh index must hold the rewritten corpus")
   }
 
+  test("ensureIvfIndex and ensureIvfAppendedIndex rebuild an index whose directory is gone") {
+    val corpus = spark.range(60).select(col("id").as("vec_id"),
+      org.apache.spark.sql.functions.transform(
+        sequence(lit(1), lit(8)), k => cos(col("id") * k)).as("embedding"))
+    val base = corpus.filter(col("vec_id") < 40)
+    val batch = corpus.filter(col("vec_id") >= 40)
+    val q = corpus.filter(col("vec_id") % 10 === 0)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val key = "ivf_gone"
+    def builds(): Seq[(String, Seq[(Int, Seq[Double])])] = Seq(
+      Similarity.ensureIvfIndex(corpus, "vec_id", "embedding", cacheKey = key, nCells = 4),
+      Similarity.ensureIvfAppendedIndex(base, batch, "vec_id", "embedding",
+        cacheKey = key, batchKey = "vec_id >= 40", nCells = 4))
+    def delete(path: String): Unit =
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    builds().foreach { case (path, _) => delete(path) }
+    for ((path, cents) <- builds()) {
+      val hits = Similarity.knnJoin(spark, path, "vec_id", "embedding",
+        q, "q_id", "q_emb", k = 3, cents, nProbe = 4, excludeSelf = true).count()
+      delete(path)
+      assert(hits == 18, s"probe of the rebuilt index at $path returned $hits rows")
+    }
+  }
+
   test("sampleMod training slices deterministically and still yields a usable codebook") {
     val e = Tables.embeddings(spark, sfDir).cache()
     // the 100-TB operating mode: train on the deterministic 1/4 md5-hash

@@ -140,9 +140,11 @@ class CapacityFactorVintagesSpec extends SparkTestBase {
     val renew = out.filter(col("technology") === "RenewablesCap")
       .select("capacity_factor").as[Double].head()
     assert(math.abs(renew - 0.5) < 1e-9)
-    // baseline relabel
-    val base = CapacityFactors.prepareCapacityFactorsIpr2023Baseline(out)
-    assert(base.select("scenario").distinct().as[String].head() == "IPR2023_baseline")
+    // baseline: every IPR2023_FPS row again, relabelled
+    val base = CapacityFactors.withIpr2023Baseline(out)
+    assert(base.select("scenario").distinct().as[String].collect().toSet ==
+      Set("IPR2023_FPS", "IPR2023_baseline"))
+    assert(base.filter(col("scenario") === "IPR2023_baseline").count() == out.count())
   }
 
   test("OXF2021 cf: WEO relabel + constant extension 2041-2100 from the 2040 value") {

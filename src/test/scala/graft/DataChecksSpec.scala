@@ -83,4 +83,21 @@ class DataChecksSpec extends SparkTestBase {
     val err = intercept[DataChecks.CheckFailed] { oc.assertClean() }
     assert(err.getMessage.contains("cf_between (1 rows)"))
   }
+
+  test("observeChecks: a cached frame reports its checks to the aggregate that fills it") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val df = Seq(0.5, 1.7).toDF("cf")
+    val oc = DataChecks.observeChecks(df, Seq(DataChecks.betweenCheck("cf", 0.0, 1.0)))
+    val cached = oc.df.withColumn("twice", col("cf") * 2).cache()
+    try {
+      DataChecks.assertAll(cached, Seq(DataChecks.notNullCheck(Seq("twice"))))
+      // assertClean blocks until the metrics arrive: bound the wait
+      val err = TimeLimits.failAfter(60.seconds) {
+        intercept[DataChecks.CheckFailed] { oc.assertClean() }
+      }
+      assert(err.getMessage.contains("cf_between (1 rows)"))
+    } finally cached.unpersist()
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Shares
-import graft.pipelines.{AssetImpact, CapacityFactors, Prices}
+import graft.pipelines.{Abcd, AssetImpact, CapacityFactors, Financial, Prices}
 
 /** Physical-plan pins for the pipeline layer (VERDICT: extend PlanSpec to
   * the pipelines) — shuffle counts and broadcast shapes that would regress
@@ -30,6 +30,31 @@ class PipelinePlanSpec extends SparkTestBase {
       val leaves = df.queryExecution.logical.collectLeaves().filter(_.isInstanceOf[LogicalRDD])
       assert(leaves.isEmpty, s"$name built a checkpoint leaf:\n${df.queryExecution.logical}")
     }
+  }
+
+  test("abcd builds without a checkpoint leaf; financial pins exactly one") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def checkpoints(df: DataFrame): Int =
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.distinct.size
+    val wide = Seq((1L, "c1", "Power", "CoalCap", "DE", "MW", 100.0, 110.0),
+        (1L, "c1", "Power", "CoalCap", "DE", "MWh", 800.0, 900.0))
+      .toDF("company_id", "company_name", "ald_sector", "ald_business_unit", "ald_location",
+        "activity_unit", "Equity Ownership 2020", "Equity Ownership 2021")
+    val abcd = Abcd.prepareAbcdData(wide, wide.withColumn("activity_unit", lit("tCO2")),
+      startYear = 2020, timeHorizon = 1, sectorList = Seq("Power"))
+    val fin = Financial.prepareFinancialData(spark,
+      Seq((10L, "DE", 0.1, 0.2, 0.5, 0.3)).toDF("company_id", "ald_location", "pd",
+        "net_profit_margin", "debt_equity_ratio", "volatility"),
+      Seq((10L, "Power", "DE"), (11L, "Power", "FR"))
+        .toDF("company_id", "ald_sector", "ald_location"),
+      None, minimumSampleSize = 0, minimumRatioSample = 0,
+      allowedRangeNpm = (Double.NegativeInfinity, Double.PositiveInfinity))
+    try {
+      assert(checkpoints(abcd) == 0,
+        s"abcd built a checkpoint leaf:\n${abcd.queryExecution.logical}")
+      assert(checkpoints(fin) == 1,
+        s"financial must pin only its company table:\n${fin.queryExecution.logical}")
+    } finally { abcd.unpersist(); fin.unpersist() }
   }
 
   test("market-share chain (tmsr+smsp) costs exactly its two partitionings") {

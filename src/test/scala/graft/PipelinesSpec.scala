@@ -111,6 +111,22 @@ class PipelinesSpec extends SparkTestBase {
     assert(out.filter(col("scenario_geography") =!= "Global").count() == 0)
   }
 
+  test("abcd: a null-business-unit row keeps its values and its asset id") {
+    val act = activities.unionByName(Seq[(Long, String, String, String, String, String,
+        Option[Double], Option[Double], Option[Double])](
+      (3L, "c3", "Oil&Gas", null, "US", "GJ", Some(5.0), Some(6.0), Some(7.0)))
+      .toDF(activities.columns: _*))
+    val out = Abcd.prepareAbcdData(act, emissionsFx,
+      startYear = 2020, timeHorizon = 2, sectorList = Seq("Power", "Oil&Gas"))
+    val c3 = out.filter(col("company_id") === 3L)
+      .select("year", "plan_tech_prod", "ald_sector", "asset_id")
+      .as[(Option[Int], Option[Double], Option[String], String)].collect().sortBy(_._1)
+    assert(c3.toSeq == Seq(
+      (Some(2020), Some(5.0), Some("Oil&Gas"), "3_1"),
+      (Some(2021), Some(6.0), Some("Oil&Gas"), "3_1"),
+      (Some(2022), Some(7.0), Some("Oil&Gas"), "3_1")))
+  }
+
   // ---- financial -------------------------------------------------------
 
   private def financialRaw: DataFrame = Seq(

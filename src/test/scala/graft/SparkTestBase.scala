@@ -64,11 +64,16 @@ object SparkTestBase {
     * asserts on the exception the action throws, so silence those two
     * classes in the test session only (the `Logs.quietBoundedWindowWarn`
     * way: per class, never the root logger). The job-abort line stays.
+    * A query that fails at analysis (a missing path) is reported to every
+    * session listener, and the `ExecutionListenerBus` logs one listener's
+    * rethrow of it with the full stack: the test asserts on the same
+    * exception, so that class is scoped too.
     */
   private def quietTaskFailures(): Unit = {
     import org.apache.logging.log4j.Level
     import org.apache.logging.log4j.core.config.Configurator
     Configurator.setLevel("org.apache.spark.executor.Executor", Level.FATAL)
     Configurator.setLevel("org.apache.spark.scheduler.TaskSetManager", Level.ERROR)
+    Configurator.setLevel("org.apache.spark.sql.util.ExecutionListenerBus", Level.FATAL)
   }
 }
