@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Ordered-group time-series operators (SURVEY §2.5 W3/W4/W8, §2.8 R4/R5).
   *
@@ -126,105 +127,112 @@ object TimeSeries {
     )
   }
 
-  /** Fused [[completeGridLocal]] + [[naApprox]] for a frame whose ONLY
-    * non-key columns are (x, v): per-group full_seq completion and linear
-    * interpolation computed group-locally over a collected (x, v) array —
-    * ONE exchange (the groupBy) where the relational spelling pays four
-    * (grid aggregate, both join sides, the interpolation window). The
-    * per-group state is the group's own observation list (a bounded year
-    * axis in every caller — tens of rows), so the collect_list is
-    * scale-safe at any group count; pure built-in higher-order functions,
-    * no UDFs.
+  /** The x axis [[completeInterpolate]] completes each key group over. */
+  sealed trait Axis
+  object Axis {
+    /** Each group's own [min(x), max(x)], as [[completeGridLocal]]
+      * (tidyr::full_seq, reference R/prepare_scenario_data.R:13-14).
+      */
+    case object PerGroup extends Axis
+    /** The frame's [min(x), max(x)], shared by every group, as
+      * [[completeGridGlobalRange]] (reference R/prepare_price_data_long.R:
+      * 197-210).
+      */
+    case object Global extends Axis
+    /** A fixed [lo, hi], as [[completeGrid]] (reference R/prepare_abcd_
+      * stress_test_input.R:95-106).
+      */
+    final case class Fixed(lo: Int, hi: Int) extends Axis {
+      require(lo <= hi, s"empty axis [$lo, $hi]")
+    }
+  }
+
+  /** Fused complete → na.approx: the matching completeGrid* call followed by
+    * one [[naApprox]] per value column, as a single generator over each
+    * key group's collected rows. `df` must hold exactly keys, x and
+    * `values`; the output columns come in completeGrid's order: keys, x,
+    * then `values`.
     *
-    * Semantics (pinned by ScenarioSpec's equivalence test against the
-    * relational spelling, and by the pipe_* oracles end to end):
-    *  - grid = [min(x), max(x)] over the group's non-null-x rows;
-    *  - observed rows pass through (all duplicates), with a null v
-    *    interpolated exactly like naApprox: pv + (nv−pv)·(x−px)/(nx−px)
-    *    over the nearest non-null neighbors, same operand casts, same
-    *    double arithmetic;
-    *  - grid-only rows carry the interpolated (or null) value;
-    *  - leading/trailing nulls stay null (na.rm=FALSE);
-    *  - null-x rows pass through verbatim (they match no grid row).
-    */
-  def completeInterpolateLocal(
-      df: DataFrame, keys: Seq[String], x: String, v: String): DataFrame = {
-    val agged = groupObservations(df, keys, x, v)
-    val lo = element_at(col("__obs"), 1).getField("x")
-    val hi = element_at(col("__obs"), size(col("__obs"))).getField("x")
-    completeFromObservations(df, agged, keys, x, v, lo, hi)
-  }
-
-  /** Fused [[completeGridGlobalRange]] + [[naApprox]] — the
-    * [[completeInterpolateLocal]] machinery with the grid spanning the
-    * GLOBAL [min(x), max(x)] (a 1-row aggregate broadcast onto every
-    * group) instead of each group's own range: every key combo completes
-    * over the same axis, edge years beyond a group's own observations
-    * stay null (na.rm=FALSE). Two exchanges (group collect + the 1-row
-    * range) where the relational spelling pays five.
-    */
-  def completeInterpolateGlobalRange(
-      df: DataFrame, keys: Seq[String], x: String, v: String): DataFrame = {
-    val mm = df.agg(min(col(x)).as("__lo"), max(col(x)).as("__hi"))
-    val agged = groupObservations(df, keys, x, v).crossJoin(broadcast(mm))
-    completeFromObservations(df, agged, keys, x, v, col("__lo"), col("__hi"))
-  }
-
-  /** One (x asc, v asc)-sorted observation array per key combo; keys whose
-    * rows ALL have null x still surface (empty array) so the global-range
-    * variant grids them like the relational spelling's distinct-keys grid.
-    */
-  private def groupObservations(
-      df: DataFrame, keys: Seq[String], x: String, v: String): DataFrame = {
-    require(df.columns.toSet == (keys :+ x :+ v).toSet,
-      s"fused complete+interpolate needs exactly keys+($x,$v); got ${df.columns.mkString(",")}")
-    df.groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(  // collect_list skips null structs
-        when(col(x).isNotNull, struct(col(x).as("x"), col(v).as("v"))))).as("__obs"))
-  }
-
-  /** Explode each group's [lo, hi] axis against its observation array:
-    * observed rows pass through (all duplicates), null values interpolate
-    * with naApprox's exact formula and casts, grid-only rows carry the
-    * interpolated (or null) value; null-x input rows pass through
-    * verbatim (they match no grid row in the relational spelling either).
+    * It reads `df` once: one groupBy collects every row of a group,
+    * null-x rows included, so the plan holds the input leaf once and
+    * costs one exchange on `keys`, which later windows on the same keys
+    * reuse. The global axis is a frame-wide window over the grouped
+    * frame, not a second scan of `df`; it gathers the groups (one row
+    * each) into one partition. The per-group state is the group's own
+    * rows, a bounded year axis in every caller.
+    *
+    * Semantics (pinned against the relational spelling by TimeSeriesSpec
+    * and ScenarioSpec, and by the pipe_* oracles end to end):
+    *  - every observed row passes through (all duplicates); each null
+    *    value takes naApprox's line pv + (nv−pv)·(x−px)/(nx−px) through
+    *    the nearest non-null observations of its own column, with the
+    *    same operand casts and double arithmetic;
+    *  - axis years with no observed row carry the interpolated (or null)
+    *    values; leading and trailing nulls stay null (na.rm=FALSE);
+    *  - observed rows outside a fixed axis stay, and anchor and take
+    *    interpolation like any other row (completeGrid's full outer join
+    *    keeps them, and naApprox then sees them);
+    *  - null-x rows pass through verbatim (they match no grid row and are
+    *    never anchors).
     *
     * Tie rule (pinned by TimeSeriesSpec): when a null value shares its
     * (key, x) with a non-null sibling, the null takes the line through the
-    * nearest non-null observations strictly before and strictly after x —
-    * never the sibling. [[naApprox]]'s running windows may pick the same-x
-    * sibling instead, depending on the order of the tied rows; R's
+    * nearest non-null observations strictly before and strictly after x,
+    * never the sibling; among same-x anchors the one sorting last (by x,
+    * then the value columns in order) is the previous one and the one
+    * sorting first is the next one. [[naApprox]]'s running windows may
+    * pick either, depending on the order of the tied rows; R's
     * `approx(ties = mean)` would return the siblings' mean.
     */
-  private def completeFromObservations(
-      df: DataFrame, agged: DataFrame, keys: Seq[String], x: String, v: String,
-      lo: Column, hi: Column): DataFrame = {
-    // non-null observations in x order — the interpolation anchors
-    val nn = filter(col("__obs"), o => o.getField("v").isNotNull)
+  def completeInterpolate(
+      df: DataFrame, keys: Seq[String], x: String, values: Seq[String], axis: Axis): DataFrame = {
+    require(df.columns.toSet == (keys ++ (x +: values)).toSet,
+      s"completeInterpolate needs exactly keys + $x + values; got ${df.columns.mkString(",")}")
+    val xType = df.schema(x).dataType
+    val v = values.indices.map(i => s"v$i")
+    val vType = v.zip(values.map(df.schema(_).dataType)).toMap
+    val grouped = df.groupBy(keys.map(col): _*).agg(sort_array(collect_list(
+      struct(col(x).as("x") +: values.zip(v).map { case (c, f) => col(c).as(f) }: _*))).as("__obs"))
+    val xs = transform(col("__obs"), _.getField("x"))
+    val (lo, hi) = axis match {
+      case Axis.PerGroup => (array_min(xs), array_max(xs))
+      case Axis.Global =>
+        val frame = Window.partitionBy(lit(0))
+        (min(array_min(xs)).over(frame), max(array_max(xs)).over(frame))
+      case Axis.Fixed(l, h) => (lit(l), lit(h))
+    }
+    // per column, its non-null observations in x order: the anchors
+    val bounded = v.foldLeft(grouped.withColumn("__lo", lo).withColumn("__hi", hi))((d, f) =>
+      d.withColumn(s"__a_$f",
+        filter(col("__obs"), o => o.getField("x").isNotNull && o.getField(f).isNotNull)))
     // naApprox's exact formula and casts: px/nx are double casts of x
-    def interp(y: Column) = {
-      val p = element_at(filter(nn, o => o.getField("x") < y), -1)
-      val n = element_at(filter(nn, o => o.getField("x") > y), 1)
+    def interp(f: String, y: Column) = {
+      val anchors = col(s"__a_$f")
+      val p = element_at(filter(anchors, o => o.getField("x") < y), -1)
+      val n = element_at(filter(anchors, o => o.getField("x") > y), 1)
       val px = p.getField("x").cast("double")
       val nx = n.getField("x").cast("double")
-      val pv = p.getField("v")
-      val nv = n.getField("v")
+      val pv = p.getField(f)
+      val nv = n.getField(f)
       when(px.isNotNull && nx.isNotNull && nx =!= px,
         pv + (nv - pv) * (y.cast("double") - px) / (nx - px))
     }
-    val rows = flatten(transform(sequence(lo, hi), y => {
+    def row(y: Column, value: String => Column) =
+      struct(y.as("x") +: v.map(f => coalesce(value(f), interp(f, y)).as(f)): _*)
+    val axisType = ArrayType(xType)
+    val years = coalesce(sequence(col("__lo"), col("__hi")).cast(axisType), array().cast(axisType))
+    val onAxis = flatten(transform(years, y => {
       val matched = filter(col("__obs"), o => o.getField("x") === y)
-      when(size(matched) > 0,
-        transform(matched, o =>
-          struct(y.as("x"), coalesce(o.getField("v"), interp(y)).as("v"))))
-        .otherwise(array(struct(y.as("x"), interp(y).as("v"))))
+      when(size(matched) > 0, transform(matched, o => row(y, o.getField)))
+        .otherwise(array(row(y, f => lit(null).cast(vType(f)))))
     }))
-    val exploded = agged
-      .select((keys.map(col) :+ explode(rows).as("__r")): _*)
-      .select((keys.map(col) :+ col("__r.x").as(x) :+ col("__r.v").as(v)): _*)
-    val nullXRows = df.filter(col(x).isNull)
-    exploded.unionByName(nullXRows.select(exploded.columns.map(col): _*))
-      .select(df.columns.map(col): _*)
+    val offAxis = transform(
+      filter(col("__obs"), o => !coalesce(o.getField("x").between(col("__lo"), col("__hi")), lit(false))),
+      o => row(o.getField("x"), o.getField))
+    bounded
+      .select(keys.map(col) :+ explode(concat(onAxis, offAxis)).as("__r"): _*)
+      .select(keys.map(col) ++ (col("__r.x").as(x) +: values.zip(v).map { case (c, f) =>
+        col(s"__r.$f").as(c) }): _*)
   }
 
   /** W3: fill-down / LOCF (reference tidyr::fill(.direction="down"),

@@ -85,21 +85,18 @@ object Abcd {
       Aggregates.sumOrAllNull(col("ald_production")).as("ald_production"),
       Aggregates.sumOrAllNull(col("emissions_factor")).as("emissions_factor")))
 
-    // reference :95-106 complete year grid per nesting keys
+    // reference :95-106 complete the year grid per nesting keys, then
+    // :267-295 interior interpolation, forward fill and 0, all on the
+    // nesting keys' one partitioning. R's is.na counts NaN as missing in
+    // every step, so NaN enters the chain as null.
     val nesting = Seq("company_id", "company_name", "ald_sector", "ald_business_unit",
       "ald_location", "ald_production_unit", "emissions_factor_unit")
-    abcd = TimeSeries.completeGrid(abcd, nesting, "year", startYear, startYear + timeHorizon)
-
-    // reference :267-295: interior interpolation, then forward fill, then 0
-    val fillKeys = Seq("company_id", "ald_sector", "ald_business_unit", "ald_location",
-      "emissions_factor_unit", "ald_production_unit")
-    abcd = TimeSeries.naApprox(abcd, fillKeys, "year", "ald_production", "ald_production")
-    abcd = TimeSeries.naApprox(abcd, fillKeys, "year", "emissions_factor", "emissions_factor")
-    abcd = TimeSeries.fillDown(abcd, fillKeys, "year", "ald_production", "ald_production")
-    abcd = TimeSeries.fillDown(abcd, fillKeys, "year", "emissions_factor", "emissions_factor")
-    abcd = abcd
-      .withColumn("ald_production", coalesce(col("ald_production"), lit(0.0)))
-      .withColumn("emissions_factor", coalesce(col("emissions_factor"), lit(0.0)))
+    val values = Seq("ald_production", "emissions_factor")
+    abcd = TimeSeries.completeInterpolate(
+      abcd.withColumns(values.map(c => c -> nanAsNull(col(c))).toMap),
+      nesting, "year", values, TimeSeries.Axis.Fixed(startYear, startYear + timeHorizon))
+    abcd = values.foldLeft(abcd)((d, c) => TimeSeries.fillDown(d, nesting, "year", c, c))
+    abcd = abcd.withColumns(values.map(c => c -> coalesce(col(c), lit(0.0))).toMap)
 
     // reference :175-210 create_emissions_factor_ratio (EF := EF/production;
     // division is IEEE in both R and Spark doubles, 0/0 -> NaN, x/0 -> Inf,

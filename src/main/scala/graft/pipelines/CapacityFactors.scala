@@ -18,6 +18,16 @@ object CapacityFactors {
 
   private val hoursToYear = 24 * 365
 
+  /** reference :110-135, repeated by the WEO2023 prep: complete the joined
+    * capacity/generation frame to [startYear, endYear] per nesting key,
+    * interpolate both columns, drop the years before startYear.
+    */
+  private def completeToEndYear(
+      joined: DataFrame, joinKeys: Seq[String], startYear: Int, endYear: Int): DataFrame =
+    TimeSeries.completeInterpolate(joined, joinKeys.filterNot(_ == "year"), "year",
+        Seq("capacity", "generation"), TimeSeries.Axis.Fixed(startYear, endYear))
+      .filter(col("year") >= startYear)
+
   /** @param data wide frame: Source, Indicator, Sector, Units, Scenario,
     *             ScenarioGeography, Technology, Sub_Technology, year cols
     */
@@ -45,9 +55,8 @@ object CapacityFactors {
       .agg(sum(col(yearCols.head)).as(yearCols.head),
         yearCols.tail.map(c => sum(col(c)).as(c)): _*)
       // JUNCTION BARRIER (the Barriers junction rule): the aggregate
-      // feeds BOTH indicator slices, and the Capacity/Generation join below
-      // therefore carries the whole subtree twice before completeGrid
-      // triples it again — one materialization pass collapses all of it.
+      // feeds BOTH indicator slices, so the Capacity/Generation join below
+      // would carry the whole subtree twice and run it twice.
       .planBarrier()
 
     // reference :69-103 — split indicator frames, unpivot, unit-convert
@@ -63,19 +72,12 @@ object CapacityFactors {
 
     val joinKeys = Seq("Source", "Scenario", "ScenarioGeography", "Sector",
       "Technology", "units", "year")
-    var cf = generation.select((joinKeys :+ "generation").map(col): _*)
+    val joined = generation.select((joinKeys :+ "generation").map(col): _*)
       .join(capacity.select((joinKeys :+ "capacity").map(col): _*), joinKeys)
       .distinct()
-      // junction: completeGrid reads the joined frame twice (distinct keys
-      // + join side)
-      .planBarrier()
 
     // reference :110-135 — complete to [startYear, endYear], interpolate
-    val nesting = joinKeys.filterNot(_ == "year")
-    cf = TimeSeries.completeGrid(cf, nesting, "year", startYear, endYear)
-    cf = TimeSeries.naApprox(cf, nesting, "year", "capacity", "capacity")
-    cf = TimeSeries.naApprox(cf, nesting, "year", "generation", "generation")
-    cf = cf.filter(col("year") >= startYear)
+    var cf = completeToEndYear(joined, joinKeys, startYear, endYear)
 
     // reference :138-149 — ratio with 0/0 -> NaN -> 0
     cf = cf
@@ -150,12 +152,8 @@ object CapacityFactors {
       .withColumn("units", lit("GW"))
     val joinKeys = Seq("source", "scenario", "scenario_geography", "sector", "technology",
       "units", "year")
-    var cf = generation.join(capacity, joinKeys).distinct()
-    val nesting = joinKeys.filterNot(_ == "year")
-    cf = TimeSeries.completeGrid(cf, nesting, "year", startYear, endYear)
-    cf = TimeSeries.naApprox(cf, nesting, "year", "capacity", "capacity")
-    cf = TimeSeries.naApprox(cf, nesting, "year", "generation", "generation")
-    cf = cf.filter(col("year") >= startYear)
+    val cf = completeToEndYear(generation.join(capacity, joinKeys).distinct(),
+        joinKeys, startYear, endYear)
       .withColumn("capacity_factor", col("generation") / col("capacity"))
       // reference :315-327 — is.na covers both NA and NaN in R
       .withColumn("capacity_factor",

@@ -84,7 +84,7 @@ object CarbonPrice {
 
     // reference :94-100 unpivot
     val keys = Seq("model", "scenario", "scenario_geography", "variable", "unit")
-    var long = Reshape.unpivotYears(wide, keys, valueName = "carbon_tax")
+    val long = Reshape.unpivotYears(wide, keys, valueName = "carbon_tax")
 
     // reference :102-110 complete min(year)..2100 per nesting keys.
     // min(year) over the whole frame is a driver-side scalar: the grid is
@@ -92,14 +92,12 @@ object CarbonPrice {
     // via a 1-row aggregate join instead of a collect at scale; here the
     // wide column set already tells us the minimum.
     val minYear = wide.columns.flatMap(c => scala.util.Try(c.toInt).toOption).min
-    long = TimeSeries.completeGrid(long, keys, "year", minYear, endYear)
 
     // reference :115-165 — conditional interpolation
-    long = TimeSeries.naApprox(long, keys, "year", "carbon_tax", "__interp")
-    long
+    TimeSeries.completeInterpolate(long, keys, "year", Seq("carbon_tax"),
+        TimeSeries.Axis.Fixed(minYear, endYear))
       .withColumn("carbon_tax",
         when(col("scenario").isin(interpolatedScenarios: _*) && col("year") >= 2025,
-          col("__interp")).otherwise(lit(0.0)))
-      .drop("__interp")
+          col("carbon_tax")).otherwise(lit(0.0)))
   }
 }

@@ -42,12 +42,10 @@ object Prices {
         Map("Crude oil" -> "Oil", "IEA crude oil" -> "Oil", "Natural gas" -> "Gas"))
       .withColumn("sector", when(col("technology") === "Coal", "Coal").otherwise("Oil&Gas"))
       .withColumn("indicator", lit("price"))
-      // JUNCTION BARRIER (the Barriers junction rule): fossil fans into
-      // the Global aggregate AND the union, and the union then enters the
-      // complete-grid (which consumes its input three times: range agg,
-      // distinct keys, join side) — without a barrier the unpivot subtree
-      // appears ~6x in the final logical tree and Catalyst re-analyzes it
-      // per consumer. One materialization pass beats that at any scale.
+      // JUNCTION BARRIER (the Barriers junction rule): fossil feeds the
+      // Global aggregate AND the union with it, so without a barrier the
+      // unpivot subtree appears twice in the final logical tree and runs
+      // twice.
       .planBarrier()
     val fossilGlobal = fossil
       .filter(col("technology").isin("Gas", "Coal"))
@@ -60,14 +58,9 @@ object Prices {
     val power = powerLcoeLong(powerWide, firstYear)
 
     // ---- union + complete + interpolate (reference :190-231) -----------
-    // junction: completeGridGlobalRange reads the union three times (the
-    // global min/max agg, the distinct-keys grid and the join side)
-    var data = fossil.unionByName(power.select(fossil.columns.map(col): _*))
-      .planBarrier()
-    // fused complete+interpolate (r16): two exchanges instead of five;
-    // equivalence to the relational spelling pinned by TimeSeriesSpec,
-    // identical interpolation arithmetic
-    data = TimeSeries.completeInterpolateGlobalRange(data, keyCols, "year", "price")
+    val data = TimeSeries.completeInterpolate(
+      fossil.unionByName(power.select(fossil.columns.map(col): _*)),
+      keyCols, "year", Seq("price"), TimeSeries.Axis.Global)
 
     // one aggregate pass for both checks (separate assert* calls would
     // re-execute the upstream plan once per check)
@@ -118,11 +111,8 @@ object Prices {
     * assertions (no NA, price >= 0).
     */
   def preparePriceDataLongPowerIpr2023(powerWide: DataFrame): DataFrame = {
-    var data = powerLcoeLong(powerWide, firstYear = 2020)
-    // fused complete+interpolate (r16): two exchanges instead of five;
-    // equivalence to the relational spelling pinned by TimeSeriesSpec,
-    // identical interpolation arithmetic
-    data = TimeSeries.completeInterpolateGlobalRange(data, keyCols, "year", "price")
+    val data = TimeSeries.completeInterpolate(powerLcoeLong(powerWide, firstYear = 2020),
+      keyCols, "year", Seq("price"), TimeSeries.Axis.Global)
     // one aggregate pass for both checks (separate assert* calls would
     // re-execute the upstream plan once per check)
     DataChecks.assertAll(data, Seq(

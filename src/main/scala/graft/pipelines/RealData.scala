@@ -261,9 +261,7 @@ object RealData {
     * start_year = 2023 (run_workflow.R:4), time_horizon = 5
     * (run_prepare_abcd_stress_test_input.R:82).
     */
-  def loadInputs(spark: SparkSession,
-      dataRaw: String = "/root/reference/data-raw",
-      rdaData: String = "/root/reference/data"): RunWorkflow.Inputs =
+  def loadInputs(spark: SparkSession, dataRaw: String, rdaData: String): RunWorkflow.Inputs =
     RunWorkflow.Inputs(
       ngfsCarbonPriceWide = ngfsCarbonPriceWide(spark, dataRaw),
       weoCapacityFactorsWide = weo2020CapacityFactorsWide(spark, dataRaw),

@@ -18,11 +18,8 @@ object ScenarioData {
     * (year, value).
     */
   def interpolateYearly(data: DataFrame, groupCols: Seq[String]): DataFrame =
-    // fused complete+interpolate: one exchange instead of four (grid
-    // aggregate + both join sides + interpolation window); equivalence to
-    // the relational spelling pinned by ScenarioSpec, same interpolation
-    // arithmetic to the bit
-    TimeSeries.completeInterpolateLocal(data, groupCols, "year", "value")
+    TimeSeries.completeInterpolate(data, groupCols, "year", Seq("value"), TimeSeries.Axis.PerGroup)
+      .select(data.columns.map(col): _*)
 
   /** reference :22-72 — tmsr + smsp over the canonical fair-share groups
     * (scenario, sector, scenario_geography) x technology. At the start
@@ -584,13 +581,13 @@ object ScenarioData {
       d: DataFrame, startYear: Int, greens: Seq[String]): DataFrame =
     formatP4i(
       addMarketShareColumns(
-        // JUNCTION BARRIER (the Barriers junction rule): the completion
-        // grid reads its input twice and every downstream prepare reads
-        // ITS result several more times (NA-perimeter anti-join,
-        // incomplete-sector prune) — across the 8-vintage merge those
-        // multiplications compound EXPONENTIALLY and Catalyst analysis of
-        // the un-barriered real-data tree dominates wall-clock (observed:
-        // minutes of pure driver plan-transform on the shipped vintages)
+        // JUNCTION BARRIER (the Barriers junction rule): every downstream
+        // prepare reads the interpolated frame several times (NA-perimeter
+        // anti-join, incomplete-sector prune) — across the 8-vintage merge
+        // those multiplications compound EXPONENTIALLY and Catalyst
+        // analysis of the un-barriered real-data tree dominates wall-clock
+        // (observed: minutes of pure driver plan-transform on the shipped
+        // vintages)
         interpolateYearly(d, interpolationGroups).filter(col("year") >= startYear)
           .planBarrier(),
         startYear),

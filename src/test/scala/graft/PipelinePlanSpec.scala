@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Shares
+import graft.ops.{Shares, TimeSeries}
 import graft.pipelines.{Abcd, AssetImpact, CapacityFactors, Financial, Prices}
 
 /** Physical-plan pins for the pipeline layer (VERDICT: extend PlanSpec to
@@ -55,6 +55,45 @@ class PipelinePlanSpec extends SparkTestBase {
       assert(checkpoints(fin) == 1,
         s"financial must pin only its company table:\n${fin.queryExecution.logical}")
     } finally { abcd.unpersist(); fin.unpersist() }
+  }
+
+  test("complete → interpolate reads its input once on every axis") {
+    // a nullable x, so no null-x branch can be optimized away
+    val df = Seq[(String, Integer, Double, Double)](("a", 2020, 1.0, 2.0), ("a", 2022, 3.0, 4.0),
+      ("b", 2021, 5.0, 6.0)).toDF("k", "x", "v", "w")
+    for (axis <- Seq(TimeSeries.Axis.PerGroup, TimeSeries.Axis.Global,
+        TimeSeries.Axis.Fixed(2020, 2023))) {
+      val out = TimeSeries.completeInterpolate(df, Seq("k"), "x", Seq("v", "w"), axis)
+      val leaves = out.queryExecution.logical.collectLeaves().size
+      assert(leaves == 1, s"$axis read its input $leaves times:\n${out.queryExecution.logical}")
+    }
+  }
+
+  test("complete → interpolate then fillDown on the same keys costs one partitioning") {
+    // with a null-x row, which must ride the same exchange
+    val df = Seq[(String, Integer, Double)](("a", 2020, 1.0), ("a", 2022, 3.0), ("b", 2021, 5.0),
+      ("b", null, 7.0)).toDF("k", "x", "v")
+    val out = TimeSeries.fillDown(
+      TimeSeries.completeInterpolate(df, Seq("k"), "x", Seq("v"), TimeSeries.Axis.Fixed(2020, 2024)),
+      Seq("k"), "x", "v", "v")
+    val n = exchanges(out)
+    assert(n == 1, s"the fill must reuse the generator's exchange, got $n:\n${plan(out)}")
+  }
+
+  test("WEO2021 capacity factors pin exactly one checkpoint") {
+    val wide = Seq(("Capacity", "GW", 100.0, 100.0), ("Generation", "TWh", 438.0, 613.2))
+      .toDF("Indicator", "Units", "2020", "2040")
+      .select(lit("WEO2020").as("Source"), col("Indicator"), lit("Power").as("Sector"),
+        col("Units"), lit("SDS").as("Scenario"), lit("World").as("ScenarioGeography"),
+        lit("Coal").as("Technology"), lit(null).cast("string").as("Sub_Technology"),
+        col("2020"), col("2040"))
+    // a barrier persists its checkpoint; only the last one is a leaf of
+    // the plan, so count the RDDs the construction pinned
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    CapacityFactors.prepareCapacityFactorsWeo2021(wide, startYear = 2020)
+    val pinned = spark.sparkContext.getPersistentRDDs -- before
+    try assert(pinned.size == 1, s"only the year-column aggregate is a junction: $pinned")
+    finally pinned.values.foreach(_.unpersist())
   }
 
   test("market-share chain (tmsr+smsp) costs exactly its two partitionings") {

@@ -127,6 +127,39 @@ class PipelinesSpec extends SparkTestBase {
       (Some(2022), Some(7.0), Some("Oil&Gas"), "3_1")))
   }
 
+  private def coalRows(rows: (Long, String, String, Option[Double], Option[Double],
+      Option[Double])*): DataFrame =
+    rows.map { case (id, name, unit, a, b, c) => (id, name, "Coal", "Coal", "FR", unit, a, b, c) }
+      .toDF(activities.columns: _*)
+
+  test("abcd: a NaN production cell counts as missing, as R's is.na does") {
+    // two EF units for one asset: a NaN production kept as NaN made both
+    // units' EF ratios NaN, both fanned out to every unit of (sector, bu),
+    // and the unique-row check threw; as a missing cell it interpolates
+    val out = Abcd.prepareAbcdData(
+      coalRows((4L, "c4", "t", Some(10.0), Some(Double.NaN), Some(12.0))),
+      coalRows((4L, "c4", "tCO2", Some(40.0), Some(44.0), Some(48.0)),
+        (4L, "c4", "tCO2e", Some(50.0), Some(55.0), Some(60.0))),
+      startYear = 2020, timeHorizon = 2, sectorList = Seq("Coal"))
+    val got = out.select("emissions_factor_unit", "year", "plan_tech_prod", "plan_emission_factor")
+      .as[(String, Int, Double, Double)].collect().toSeq.sorted
+    assert(got == Seq("tCO2/t" -> 4.0, "tCO2e/t" -> 5.0).flatMap { case (u, ef) =>
+      Seq((u, 2020, 10.0, ef), (u, 2021, 11.0, ef), (u, 2022, 12.0, ef)) })
+  }
+
+  test("abcd: two names under one company_id interpolate and fill separately") {
+    val out = Abcd.prepareAbcdData(
+      coalRows((5L, "c5", "t", Some(1.0), None, Some(3.0)),
+        (5L, "c5 ltd", "t", None, Some(10.0), None)),
+      coalRows((5L, "c5", "tCO2", Some(2.0), Some(4.0), Some(6.0)),
+        (5L, "c5 ltd", "tCO2", Some(20.0), Some(20.0), Some(20.0))),
+      startYear = 2020, timeHorizon = 2, sectorList = Seq("Coal"))
+    val got = out.select("company_name", "year", "plan_tech_prod")
+      .as[(String, Int, Double)].collect().toSeq.sorted
+    assert(got == Seq(("c5", 2020, 1.0), ("c5", 2021, 2.0), ("c5", 2022, 3.0),
+      ("c5 ltd", 2020, 0.0), ("c5 ltd", 2021, 10.0), ("c5 ltd", 2022, 10.0)))
+  }
+
   // ---- financial -------------------------------------------------------
 
   private def financialRaw: DataFrame = Seq(

@@ -17,7 +17,7 @@ import graft.sources.Rds
   */
 class RdaSpec extends SparkTestBase {
 
-  private val refData = "/root/reference/data"
+  private def refData = ReferenceData.path("data")
 
   private def bytesOf(name: String): Array[Byte] =
     Files.readAllBytes(Paths.get(s"$refData/$name"))

@@ -18,8 +18,8 @@ class RdsSpec extends SparkTestBase {
     StructField("country", StringType)))
 
   test("reads the reference's R-produced bench_regions.rds, equal to its CSV twin") {
-    val rds = Rds.read(spark, "/root/reference/data-raw/bench_regions.rds", benchSchema)
-    val csv = TypedCsv.read(spark, "/root/reference/data-raw/bench_regions.csv", benchSchema)
+    val rds = Rds.read(spark, ReferenceData.path("data-raw/bench_regions.rds"), benchSchema)
+    val csv = TypedCsv.read(spark, ReferenceData.path("data-raw/bench_regions.csv"), benchSchema)
     assert(rds.count() == 2518)
     // the reference's own twins drifted on ONE cell (rds says ZAF, csv says
     // SAF for South Africa) — the scan must reproduce the rds faithfully,

@@ -48,7 +48,8 @@ class RealDataSpec extends SparkTestBase {
     finally super.afterAll()
 
   private lazy val outputs: RunWorkflow.Outputs =
-    RunWorkflow.run(spark, RealData.loadInputs(spark))
+    RunWorkflow.run(spark,
+      RealData.loadInputs(spark, ReferenceData.path("data-raw"), ReferenceData.path("data")))
 
   private def noNulls(df: DataFrame, cols: Seq[String]): Long =
     df.filter(cols.map(col(_).isNull).reduce(_ || _)).count()

@@ -85,6 +85,8 @@ class ScenarioSpec extends SparkTestBase {
   }
 
   test("completeInterpolateLocal replays completeGridLocal + naApprox exactly") {
+    // completeInterpolate on the per-group axis, which replaced
+    // completeInterpolateLocal
     // every edge the fused rewrite must preserve: interior holes, leading
     // and trailing nulls (na.rm=FALSE), an all-null group, a single-row
     // group, duplicate (key, x) observations, a null-x pass-through row,
@@ -98,8 +100,8 @@ class ScenarioSpec extends SparkTestBase {
       ("f", null, 9.0), ("f", 2020, 1.0), ("f", 2023, null)    // null-x pass-through
     )
     val df = rows.toDF("g", "year", "value")
-    val fused = graft.ops.TimeSeries
-      .completeInterpolateLocal(df, Seq("g"), "year", "value")
+    val fused = graft.ops.TimeSeries.completeInterpolate(
+      df, Seq("g"), "year", Seq("value"), graft.ops.TimeSeries.Axis.PerGroup)
     val relational = graft.ops.TimeSeries.naApprox(
       graft.ops.TimeSeries.completeGridLocal(df, Seq("g"), "year"),
       Seq("g"), "year", "value", "value")

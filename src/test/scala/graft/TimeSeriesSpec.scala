@@ -109,32 +109,50 @@ class TimeSeriesSpec extends SparkTestBase {
   }
 
   test("completeInterpolateGlobalRange replays completeGridGlobalRange + naApprox exactly") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // interior holes, group ranges narrower than the global axis (edge
-    // nulls must stay null), an all-null group, duplicate (key, x) rows,
-    // a key whose ONLY row has null x (the distinct-keys grid must still
-    // cover it), and non-dyadic doubles compared to the bit
-    val rows: Seq[(String, Integer, java.lang.Double)] = Seq(
+    // completeInterpolate (which replaced completeInterpolateGlobalRange)
+    // on the global axis and on a fixed axis, each against its relational
+    // spelling, doubles compared to the bit
+    def key(r: Row) = r.toSeq.map {
+      case d: java.lang.Double => java.lang.Double.doubleToLongBits(d).toString
+      case o => String.valueOf(o)
+    }.mkString("|")
+    def replays(fused: org.apache.spark.sql.DataFrame,
+        relational: org.apache.spark.sql.DataFrame): Unit = {
+      assert(fused.columns.toSeq == relational.columns.toSeq)
+      assert(fused.collect().map(key).sorted.toSeq == relational.collect().map(key).sorted.toSeq)
+    }
+    // global axis: interior holes, group ranges narrower than the global
+    // axis (edge nulls must stay null), an all-null group, duplicate
+    // (key, x) rows, a key whose ONLY row has null x (the distinct-keys
+    // grid must still cover it), and non-dyadic doubles
+    val global = Seq[(String, Integer, java.lang.Double)](
       ("a", 2020, 1.0), ("a", 2024, null), ("a", 2027, 0.7),
       ("b", 2022, 3.3), ("b", 2025, null),
       ("c", 2021, null), ("c", 2023, null),
       ("d", 2030, 5.5),
       ("e", 2020, 2.0), ("e", 2022, 2.0), ("e", 2022, 4.0), ("e", 2024, 1.0),
       ("f", null, 9.0)
-    )
-    val df = rows.toDF("g", "x", "v")
-    val fused = graft.ops.TimeSeries.completeInterpolateGlobalRange(df, Seq("g"), "x", "v")
-    val relational = graft.ops.TimeSeries.naApprox(
-      graft.ops.TimeSeries.completeGridGlobalRange(df, Seq("g"), "x"),
-      Seq("g"), "x", "v", "v")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), Option(r.get(1)).map(_.toString).getOrElse(""),
-        Option(r.get(2)).map(d => java.lang.Double.doubleToLongBits(
-          d.asInstanceOf[Double])).getOrElse(Long.MinValue))
-    val f = fused.collect().map(key).sortBy(identity)
-    val r = relational.collect().map(key).sortBy(identity)
-    assert(f.toSeq == r.toSeq)
+    ).toDF("g", "x", "v")
+    replays(TimeSeries.completeInterpolate(global, Seq("g"), "x", Seq("v"), TimeSeries.Axis.Global),
+      TimeSeries.naApprox(TimeSeries.completeGridGlobalRange(global, Seq("g"), "x"),
+        Seq("g"), "x", "v", "v"))
+    // fixed axis [2020, 2025], two value columns each interpolating from
+    // its own anchors: rows outside the axis stay, anchor and interpolate
+    // (a: 2017/2018 and 2026/2027; d lies wholly outside), null-x rows
+    // pass through (c), an all-null group (e)
+    val fixed = Seq[(String, Integer, java.lang.Double, java.lang.Double)](
+      ("a", 2017, null, 0.5), ("a", 2018, 1.0, null), ("a", 2020, null, 2.0),
+      ("a", 2023, 4.0, null), ("a", 2026, null, 5.5), ("a", 2027, 7.3, null),
+      ("b", 2021, 0.3, 0.7), ("b", 2024, null, null), ("b", 2025, 0.9, 1.1),
+      ("c", null, 9.0, 1.0), ("c", null, null, null), ("c", 2022, null, 3.0),
+      ("d", 2019, 2.0, 2.0), ("d", 2030, null, 6.0),
+      ("e", 2021, null, null)
+    ).toDF("g", "x", "v", "w")
+    val grid = TimeSeries.completeGrid(fixed, Seq("g"), "x", 2020, 2025)
+    replays(TimeSeries.completeInterpolate(fixed, Seq("g"), "x", Seq("v", "w"),
+        TimeSeries.Axis.Fixed(2020, 2025)),
+      TimeSeries.naApprox(TimeSeries.naApprox(grid, Seq("g"), "x", "v", "v"),
+        Seq("g"), "x", "w", "w"))
   }
 
   test("fused interpolation tie rule: a null beside a same-x non-null sibling skips it") {
@@ -144,9 +162,18 @@ class TimeSeriesSpec extends SparkTestBase {
     // grid-only years 2021/2023 do use the sibling as an anchor
     val df = ts(("a", 2020, 1.0), ("a", 2022, null), ("a", 2022, 5.0), ("a", 2024, 3.0))
     val want = Seq((2020, 1.0), (2021, 3.0), (2022, 2.0), (2022, 5.0), (2023, 4.0), (2024, 3.0))
-    for (out <- Seq(TimeSeries.completeInterpolateLocal(df, Seq("k"), "x", "v"),
-        TimeSeries.completeInterpolateGlobalRange(df, Seq("k"), "x", "v"))) {
+    for (axis <- Seq(TimeSeries.Axis.PerGroup, TimeSeries.Axis.Global)) {
+      val out = TimeSeries.completeInterpolate(df, Seq("k"), "x", Seq("v"), axis)
       assert(out.select("x", "v").as[(Int, Double)].collect().toSeq.sorted == want)
     }
+    // on a fixed axis with a second value column: w has no value at 2022,
+    // so both 2022 rows take w's own line through (2020, 10) and (2024, 30)
+    val two = Seq[(String, Int, java.lang.Double, java.lang.Double)](
+      ("a", 2020, 1.0, 10.0), ("a", 2022, null, null), ("a", 2022, 5.0, null),
+      ("a", 2024, 3.0, 30.0)).toDF("k", "x", "v", "w")
+    val out = TimeSeries.completeInterpolate(two, Seq("k"), "x", Seq("v", "w"),
+      TimeSeries.Axis.Fixed(2020, 2024))
+    assert(out.select("x", "v", "w").as[(Int, Double, Double)].collect().toSeq.sorted ==
+      want.map { case (x, v) => (x, v, 10.0 + 5 * (x - 2020)) })
   }
 }

@@ -34,7 +34,7 @@ class XlsxSpec extends SparkTestBase {
     val schema = StructType(Seq(
       StructField("scenario_geography", StringType),
       StructField("country", StringType)))
-    val df = Xlsx.read(spark, "/root/reference/data-raw/matchingregions.xlsx",
+    val df = Xlsx.read(spark, ReferenceData.path("data-raw/matchingregions.xlsx"),
       "Tabelle1", schema)
     val rows = df.collect()
     assert(rows.length == 275, s"expected 275 data rows, got ${rows.length}")
