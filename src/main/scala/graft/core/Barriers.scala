@@ -6,9 +6,9 @@ import org.apache.spark.sql.DataFrame
   *
   * The reference's eager R scripts reuse intermediate frames freely; in
   * lazy Spark every reuse duplicates the upstream LOGICAL SUBTREE, and a
-  * chain of stages that each read their input 2-3 times (a frame feeding
-  * both an aggregate and a union with that aggregate, as the regional →
-  * Global price means do) grows the tree EXPONENTIALLY —
+  * chain of stages that each read their input several times (a frame
+  * feeding an anti join, a rollup and a union with both, as financial's
+  * company table does) grows the tree EXPONENTIALLY —
   * the multi-vintage scenario merge alone reaches millions of Catalyst
   * nodes and analysis time dominates execution. A barrier materializes the
   * junction once and replaces the subtree with a leaf.

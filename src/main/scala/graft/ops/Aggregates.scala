@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.WindowSpec
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Aggregation operators (SURVEY §2.4). All compose built-in hash aggregates
@@ -25,6 +25,32 @@ object Aggregates {
   /** [[allNullOrZero]] over a window: flags every row of an empty group. */
   def allNullOrZero(c: Column, w: WindowSpec): Column =
     (count(c).over(w) === 0) || (sum(c).over(w) === 0)
+
+  /** Regional → Global mean as one generator: to every group of all columns
+    * except `geography` and `value` that `where` selects, append one row
+    * labelled `Global` holding the group's `avg(value)` (nulls skipped).
+    * Every input row passes through unchanged — duplicates are not
+    * collapsed, and an existing `Global` row is averaged in and kept — so
+    * it equals `df ∪ (groupBy → avg → Global)` while reading `df` once,
+    * through one window partitioning. `where` must read group columns only.
+    */
+  def appendGlobalMean(df: DataFrame, geography: String, value: String,
+      where: Column = lit(true)): DataFrame = {
+    val group = Window.partitionBy(df.columns.filterNot(Set(geography, value)).map(col).toSeq: _*)
+      .orderBy(col(geography))
+    val mean = graft.core.Cols.fresh(df, "__mean")
+    val firstRow = graft.core.Cols.fresh(df.columns.toSeq :+ mean, "__first")
+    val isGlobal = graft.core.Cols.fresh(df.columns.toSeq ++ Seq(mean, firstRow), "__global")
+    df.select(col("*"),
+        avg(col(value)).over(group.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as(mean),
+        (where && row_number().over(group) === 1).as(firstRow))
+      .withColumn(isGlobal,
+        explode(when(col(firstRow), array(lit(false), lit(true))).otherwise(array(lit(false)))))
+      .withColumn(geography, when(col(isGlobal), lit("Global")).otherwise(col(geography)))
+      .withColumn(value, when(col(isGlobal), col(mean)).otherwise(col(value)))
+      .drop(mean, firstRow, isGlobal)
+  }
 
   /** A3: exact linear-interpolated median, matching R's stats::median default
     * (reference R/prepare_prewrangled_financial_data_stress_test.R:61-108

@@ -3,8 +3,8 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.DataChecks
-import graft.ops.{Regression, Reshape, TimeSeries}
+import graft.core.{Cols, DataChecks}
+import graft.ops.{Aggregates, Regression, Reshape, TimeSeries}
 import graft.core.Barriers.BarrierOps
 
 /** Price pipeline — Spark re-expression of prepare_price_data_long_WEO2021
@@ -42,28 +42,24 @@ object Prices {
         Map("Crude oil" -> "Oil", "IEA crude oil" -> "Oil", "Natural gas" -> "Gas"))
       .withColumn("sector", when(col("technology") === "Coal", "Coal").otherwise("Oil&Gas"))
       .withColumn("indicator", lit("price"))
-      // JUNCTION BARRIER (the Barriers junction rule): fossil feeds the
-      // Global aggregate AND the union with it, so without a barrier the
-      // unpivot subtree appears twice in the final logical tree and runs
-      // twice.
-      .planBarrier()
-    val fossilGlobal = fossil
-      .filter(col("technology").isin("Gas", "Coal"))
-      .groupBy("source", "scenario", "sector", "technology", "year", "unit", "indicator")
-      .agg(avg(col("price")).as("price"))
-      .withColumn("scenario_geography", lit("Global"))
-    fossil = fossil.unionByName(fossilGlobal.select(fossil.columns.map(col): _*))
+    fossil = Aggregates.appendGlobalMean(fossil, "scenario_geography", "price",
+      where = col("technology").isin("Gas", "Coal"))
 
     // ---- power / LCOE (reference :97-189) ------------------------------
     val power = powerLcoeLong(powerWide, firstYear)
 
     // ---- union + complete + interpolate (reference :190-231) -----------
-    val data = TimeSeries.completeInterpolate(
-      fossil.unionByName(power.select(fossil.columns.map(col): _*)),
-      keyCols, "year", Seq("price"), TimeSeries.Axis.Global)
+    completeChecked(fossil.unionByName(power.select(fossil.columns.map(col): _*)))
+  }
 
-    // one aggregate pass for both checks (separate assert* calls would
-    // re-execute the upstream plan once per check)
+  /** The shared tail of the WEO2021 and IPR2023 power price preps: complete
+    * and interpolate over the global year range, then the reference's hard
+    * assertions (no NA, price >= 0) in one aggregate pass (separate assert*
+    * calls would re-execute the upstream plan once per check).
+    */
+  private def completeChecked(prices: DataFrame): DataFrame = {
+    val data = TimeSeries.completeInterpolate(prices, keyCols, "year", Seq("price"),
+      TimeSeries.Axis.Global)
     DataChecks.assertAll(data, Seq(
       DataChecks.notNullCheck(Seq("price")),
       DataChecks.betweenCheck("price", 0.0, Double.MaxValue)))
@@ -94,14 +90,9 @@ object Prices {
     // placeholder OilCap/HydroCap from GasCap/RenewablesCap (reference :144-158)
     power = Reshape.fanOut(power, "technology", Map(
       "GasCap" -> Seq("GasCap", "OilCap"), "RenewablesCap" -> Seq("RenewablesCap", "HydroCap")))
-    power = TimeSeries.fillDown(power, keyCols.filterNot(_ == "year"), "year", "price", "price")
-      // junction: the filled frame feeds the Global aggregate AND the union
-      .planBarrier()
-    val powerGlobal = power
-      .groupBy("source", "scenario", "year", "sector", "technology", "unit", "indicator")
-      .agg(avg(col("price")).as("price"))
-      .withColumn("scenario_geography", lit("Global"))
-    power.unionByName(powerGlobal.select(power.columns.map(col): _*))
+    Aggregates.appendGlobalMean(
+      TimeSeries.fillDown(power, keyCols.filterNot(_ == "year"), "year", "price", "price"),
+      "scenario_geography", "price")
   }
 
   /** reference R/prepare_price_data_long.R:488-560
@@ -110,16 +101,8 @@ object Prices {
     * the global year range, interpolated, with the reference's hard
     * assertions (no NA, price >= 0).
     */
-  def preparePriceDataLongPowerIpr2023(powerWide: DataFrame): DataFrame = {
-    val data = TimeSeries.completeInterpolate(powerLcoeLong(powerWide, firstYear = 2020),
-      keyCols, "year", Seq("price"), TimeSeries.Axis.Global)
-    // one aggregate pass for both checks (separate assert* calls would
-    // re-execute the upstream plan once per check)
-    DataChecks.assertAll(data, Seq(
-      DataChecks.notNullCheck(Seq("price")),
-      DataChecks.betweenCheck("price", 0.0, Double.MaxValue)))
-    data.select((keyCols :+ "year" :+ "price").map(col): _*)
-  }
+  def preparePriceDataLongPowerIpr2023(powerWide: DataFrame): DataFrame =
+    completeChecked(powerLcoeLong(powerWide, firstYear = 2020))
 
   private val ngfsScenarioRecode = Map(
     "Nationally Determined Contributions (NDCs)" -> "NDC", "Below 2 C" -> "B2DS",
@@ -184,74 +167,39 @@ object Prices {
     * unit conversion.
     */
   def preparePriceDataLongIpr2023(data: DataFrame, startYear: Int): DataFrame = {
-    var d = data
+    val tech = col("technology")
+    // :413-447 — the Global means from partial regional coverage as one
+    // two-level aggregate. Level 1 averages the regions per (scenario,
+    // technology, variable class, year), with oil's class nulled so that
+    // oil averages its regions and high/low together. Level 2 averages gas
+    // over its high/low classes; a coal or oil group holds one row there.
+    val global = data
       .withColumn("technology",
         when(col("Sub_variable_class_1") === "Oil", "Oil")
           .when(col("Sub_variable_class_1") === "Coal", "Coal")
           .when(col("Sub_variable_class_1") === "Natural gas", "Gas"))
-      .withColumn("sector",
-        when(col("technology").isin("Oil", "Gas"), "Oil&Gas")
-          .when(col("technology") === "Coal", "Coal"))
-      .withColumn("__scenario",
+      .filter(tech.isNotNull)
+      .groupBy(
         when(col("Scenario") === "RPS", "IPR2023_RPS")
-          .when(col("Scenario") === "FPS", "IPR2023_FPS"))
-      .select(col("__scenario").as("scenario"), col("Region").as("scenario_geography"),
-        col("Units").as("unit"), col("Variable_class"), col("technology"), col("sector"),
-        col("year"), col("value").as("price"))
-      // junction: d feeds the coal, gas and oil global aggregates — three
-      // consumers
-      .planBarrier()
-    // :413-447 — three global aggregates from partial regional coverage
-    val coalGlobal = d.filter(col("technology") === "Coal")
-      .groupBy("scenario", "Variable_class", "year")
+          .when(col("Scenario") === "FPS", "IPR2023_FPS").as("scenario"),
+        tech, when(tech === "Oil", lit(null)).otherwise(col("Variable_class")).as("class"),
+        col("year"))
+      .agg(avg(col("value")).as("price"))
+      .groupBy(col("scenario"), tech, when(tech === "Gas", lit(null)).otherwise(col("class")),
+        col("year"))
       .agg(avg(col("price")).as("price"))
-      .withColumn("Variable_class", lit("price"))
-      .withColumn("scenario_geography", lit("Global"))
-      .withColumn("sector", lit("Coal"))
-      .withColumn("technology", lit("Coal"))
-      .withColumn("unit", lit("USD / tonne"))
-    // gas: mean over regions per (scenario, variable class = high/low),
-    // then mean of high/low
-    val gasGlobal = d.filter(col("technology") === "Gas")
-      .groupBy("scenario", "Variable_class", "year")
-      .agg(avg(col("price")).as("price"))
-      .groupBy("scenario", "year")
-      .agg(avg(col("price")).as("price"))
-      .withColumn("Variable_class", lit("price"))
-      .withColumn("scenario_geography", lit("Global"))
-      .withColumn("sector", lit("Oil&Gas"))
-      .withColumn("technology", lit("Gas"))
-      .withColumn("unit", lit("USD / MMBtu"))
-    val oilAvg = d.filter(col("technology") === "Oil")
-      .groupBy("scenario", "year")
-      .agg(avg(col("price")).as("price"))
-      .withColumn("Variable_class", lit("price"))
-      .withColumn("scenario_geography", lit("Global"))
-      .withColumn("sector", lit("Oil&Gas"))
-      .withColumn("technology", lit("Oil"))
-      .withColumn("unit", lit("USD / Barrel"))
-    val cols = coalGlobal.columns.map(col).toIndexedSeq
-    var out = coalGlobal
-      .unionByName(gasGlobal.select(cols: _*))
-      .unionByName(oilAvg.select(cols: _*))
-    // :452-467 — unit normalization
-    out = out
-      .withColumn("price",
-        when(col("unit") === "USD / Barrel", col("price") * 0.16)
-          .when(col("unit") === "USD / MMBtu", col("price") * 0.9478171203)
-          .otherwise(col("price")))
-      .withColumn("unit",
-        when(col("unit").isin("USD / Barrel", "USD / MMBtu"), "GJ")
-          .when(col("unit") === "USD / tonne", "usd/tonne"))
-    out.withColumnRenamed("Variable_class", "indicator")
-      .withColumn("year", col("year").cast("int"))
+    // :452-467 — barrel/MMBtu → GJ unit normalization
+    global.select(col("scenario"), lit("price").as("indicator"),
+        col("year").cast("int").as("year"),
+        when(tech === "Oil", col("price") * 0.16)
+          .when(tech === "Gas", col("price") * 0.9478171203)
+          .otherwise(col("price")).as("price"),
+        lit("Global").as("scenario_geography"),
+        when(tech === "Coal", "Coal").otherwise("Oil&Gas").as("sector"),
+        tech,
+        when(tech === "Coal", "usd/tonne").otherwise("GJ").as("unit"))
       .filter(col("year") >= startYear)
   }
-
-  /** reference :631-639 — IPR baseline prices = WEO2021 STEPS relabelled. */
-  def preparePriceDataLongIpr2023Baseline(data: DataFrame): DataFrame =
-    data.filter(col("scenario") === "WEO2021_STEPS")
-      .withColumn("scenario", lit("IPR2023_baseline"))
 
   /** reference :644-736 prepare_price_data_long_Oxf2021: LCOE-named raw
     * prices, constant-extension rows 2070-2100, scenario/sector recodes
@@ -321,46 +269,53 @@ object Prices {
     * (reference R/prepare_LCOE_adjusted_price_data.R:18-71, :137-172,
     * :264-302, :396-437 repeat it verbatim): implied start-year market
     * price = lcoe_t0 / (1 - npm), scaled over time by the cost factor
-    * lcoe_t0 / lcoe_t, indicator relabelled to "price". The implied side
-    * is one row per group — broadcast back onto the series.
+    * lcoe_t0 / lcoe_t, indicator relabelled to "price".
+    *
+    * One window pass over `keys` (and `adjust`, so rows it leaves alone
+    * never share an adjusted group's window): the start-year anchors are
+    * collected over the group and exploded, which keeps the inner join's
+    * cardinality — a group without a start-year row drops out, one with k
+    * such rows yields each row k times, and a row with a null key drops.
+    * Rows where `adjust` is false pass through once, unchanged.
     */
   private def impliedPriceAdjust(
-      lcoeRows: DataFrame,
+      df: DataFrame,
       keys: Seq[String],
       averageNpm: Double,
-      startYear: Int): DataFrame = {
-    // junction: the LCOE slice feeds the one-row-per-group implied side AND
-    // the windowed series side
-    val lcoe = lcoeRows.planBarrier()
-    val implied = lcoe.filter(col("year") === startYear)
-      .withColumn("implied_price", col("price") / (1 - averageNpm))
-      .select((keys.map(col) :+ col("implied_price")): _*)
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col("year"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lcoe
-      .withColumn("cost_factor", first(col("price")).over(w) / col("price"))
-      .join(broadcast(implied), keys)
-      .withColumn("price", col("implied_price") * col("cost_factor"))
-      .withColumn("indicator", lit("price"))
-      .drop("cost_factor", "implied_price")
+      startYear: Int,
+      adjust: Column = lit(true)): DataFrame = {
+    val w = Window.partitionBy((adjust +: keys.map(col)): _*).orderBy(col("year"))
+    val anchor = struct((col("price") / (1 - averageNpm)).as("implied_price"))
+    val Seq(costFactor, anchors) = Seq("cost_factor", "anchors").map(Cols.fresh(df, _))
+    df.filter(!adjust || keys.map(col(_).isNotNull).reduce(_ && _))
+      .select(col("*"),
+        (first(col("price")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) /
+          col("price")).as(costFactor),
+        // a row left alone carries one unused anchor, so the explode keeps it once
+        when(adjust, collect_list(when(col("year") === startYear, anchor))
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+          .otherwise(array(anchor)).as(anchors))
+      .withColumn(anchors, explode(col(anchors)))
+      .withColumn("price",
+        when(adjust, col(s"$anchors.implied_price") * col(costFactor)).otherwise(col("price")))
+      .withColumn("indicator", when(adjust, lit("price")).otherwise(col("indicator")))
+      .drop(costFactor, anchors)
   }
+
+  private val lcoeKeys =
+    Seq("source", "scenario", "scenario_geography", "sector", "technology", "unit")
 
   /** reference R/prepare_LCOE_adjusted_price_data.R:18-71 — derive implied
     * market prices from LCOE by adding the start-year profit margin scaled
-    * by the cost factor lcoe_t0 / lcoe_t.
+    * by the cost factor lcoe_t0 / lcoe_t; every other row passes through.
+    * A row whose sector or indicator is null is dropped, as the reference's
+    * LCOE filter and its `!` complement both drop it.
     */
   def lcoeAdjustedPrices(input: DataFrame, averageNpmPower: Double, startYear: Int): DataFrame = {
-    // junction: the filtered frame feeds the LCOE slice AND its complement
-    val unadjusted = input.filter(col("year") >= startYear).planBarrier()
-    val lcoe = unadjusted.filter(col("sector") === "Power" && col("indicator") === "LCOE")
-    val adjusted = impliedPriceAdjust(lcoe,
-        Seq("source", "scenario", "scenario_geography", "sector", "technology", "unit"),
-        averageNpmPower, startYear)
+    val isLcoe = col("sector") === "Power" && col("indicator") === "LCOE"
+    impliedPriceAdjust(input.filter(col("year") >= startYear && isLcoe.isNotNull),
+        lcoeKeys, averageNpmPower, startYear, adjust = isLcoe)
       .select(input.columns.map(col): _*)
-    adjusted.unionByName(
-      unadjusted.filter(!(col("sector") === "Power" && col("indicator") === "LCOE")))
   }
 
   /** reference R/prepare_LCOE_adjusted_price_data.R:81-258
@@ -397,7 +352,7 @@ object Prices {
       .filter(col("__scenario") =!= "slow_transition_oxford")
       .select(col("__scenario").as("scenario"), col("scenario_geography"),
         col("Sector").as("sector"), col("technology"), col("unit"),
-        col("Year").as("year"), col("LCOE").as("price"))
+        col("Year").as("year"), col("LCOE").as("price"), lit("LCOE").as("indicator"))
       // null technologies are dropped, as the `!=` complement filter drops NA
       .filter(col("technology").isNotNull)
     // :119-132 — OilCap clone + RenewablesCap mean-collapse (window mean +
@@ -410,12 +365,12 @@ object Prices {
         when(col("technology") === "RenewablesCap", avg(col("price")).over(wRenew))
           .otherwise(col("price")))
       .distinct()
+    // junction: the adjusted frame has four reads — the extension's
+    // distinct-keys grid, the union with it, the OLS fit and the fit's
+    // join back
     d = impliedPriceAdjust(d,
       Seq("scenario", "scenario_geography", "sector", "technology", "unit"),
-      averageNpmPower, startYear)
-    // junction: the adjusted frame feeds the extension's distinct-keys grid
-    // AND the union
-    d = d.planBarrier()
+      averageNpmPower, startYear).planBarrier()
     // :174-195 — extension rows 2070-2100 (the reference also fabricates
     // slow-transition rows here, but every downstream branch filters them
     // back out, so only the two live scenarios are extended)
@@ -439,30 +394,18 @@ object Prices {
   def prepareLcoeAdjustedPriceDataIpr2023(
       input: DataFrame,
       averageNpmPower: Double,
-      startYear: Int): DataFrame = {
-    // junction: the filtered frame feeds the LCOE slice AND its complement
-    val unadjusted = input.filter(col("year") >= startYear).planBarrier()
-    val lcoe = unadjusted.filter(col("sector") === "Power" && col("indicator") === "LCOE")
-    val adjusted = impliedPriceAdjust(lcoe,
-        Seq("source", "scenario", "scenario_geography", "sector", "technology", "unit"),
-        averageNpmPower, startYear)
-      .select(input.columns.map(col): _*)
-      .unionByName(
-        unadjusted.filter(!(col("sector") === "Power" && col("indicator") === "LCOE")))
-      .filter(col("scenario_geography") === "Global" && col("scenario") === "SDS")
-    Reshape.fanOut(adjusted, "scenario", Map("SDS" -> Seq("IPR2023_FPS", "IPR2023_RPS")))
-  }
+      startYear: Int): DataFrame =
+    Reshape.fanOut(
+      lcoeAdjustedPrices(input, averageNpmPower, startYear)
+        .filter(col("scenario_geography") === "Global" && col("scenario") === "SDS"),
+      "scenario", Map("SDS" -> Seq("IPR2023_FPS", "IPR2023_RPS")))
 
   /** reference :333-385 MP_LC_steel_wrangling: Global = mean over regions,
     * relevant technologies/scenarios only, steel technology fan-outs
     * (EAF→BF-EAF, BF-BOF→{BOF, BF-OHF}), Mission-Possible labels.
     */
   def mpLcSteelWrangling(data: DataFrame): DataFrame = {
-    val globalAgg = data
-      .groupBy("scenario", "year", "technology")
-      .agg(avg(col("levelized_cost")).as("levelized_cost"))
-      .withColumn("region", lit("Global"))
-    val d = data.unionByName(globalAgg.select(data.columns.map(col): _*))
+    val d = Aggregates.appendGlobalMean(data, "region", "levelized_cost")
       .withColumnRenamed("levelized_cost", "price")
       .withColumnRenamed("region", "scenario_geography")
       .filter(col("technology").isin("Avg BF-BOF", "DRI-Melt-BOF", "EAF", "DRI-EAF"))
@@ -488,9 +431,7 @@ object Prices {
       startYear: Int): DataFrame = {
     val lc = input.filter(col("year") >= startYear)
       .filter(col("sector") === "Steel" && col("indicator") === "Levelized Cost")
-    impliedPriceAdjust(lc,
-        Seq("source", "scenario", "scenario_geography", "sector", "technology", "unit"),
-        averageNpmSteel, startYear)
+    impliedPriceAdjust(lc, lcoeKeys, averageNpmSteel, startYear)
       .select(input.columns.map(col): _*)
       .drop("source")
       .withColumn("scenario",

@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Reshape
 
 /** Full-batch orchestrator — the Spark twin of data-raw/run_workflow.R's
   * sequential script. Each stage is a pure function over DataFrames; the
@@ -164,17 +165,11 @@ object RunWorkflow {
     */
   private def adjustedWeoPrices(
       fossilWide: DataFrame, powerWide: DataFrame,
-      vintage: String, npm: Double, startYear: Int): DataFrame = {
-    import graft.core.Barriers.BarrierOps
+      vintage: String, npm: Double, startYear: Int): DataFrame =
     Prices.lcoeAdjustedPrices(
         Prices.preparePriceDataLongWeo2021(fossilWide, powerWide), npm, startYear)
       .withColumn("scenario", concat(lit(vintage + "_"), col("scenario")))
       .drop("source")
-      // junction: the WEO2021 instance feeds BOTH the main union and the
-      // IPR2023 baseline clone (mergePriceVintages) — barrier once instead
-      // of computing the adjusted-price DAG per consumer
-      .planBarrier()
-  }
 
   /** Multi-vintage price merge (run_prepare_price_data_long.R:345-361):
     * WEO2021, WEO2023, NGFS2023(+Oxford LCOE), NGFS2024(+Oxford LCOE),
@@ -184,8 +179,14 @@ object RunWorkflow {
     */
   private def mergePriceVintages(
       in: Inputs, v: VintageInputs): DataFrame = {
-    val adjWeo2021 = adjustedWeoPrices(
+    val weo2021 = adjustedWeoPrices(
       in.fossilFuelPricesWide, in.powerLcoeWide, "WEO2021", v.averageNpmPower, in.startYear)
+    // :274 — with IPR prices, the IPR baseline clones the adjusted WEO2021
+    // STEPS path
+    val adjWeo2021 =
+      if (v.ipr2023FossilPrices.isEmpty) weo2021
+      else Reshape.fanOut(weo2021, "scenario",
+        Map("WEO2021_STEPS" -> Seq("WEO2021_STEPS", "IPR2023_baseline")))
     def ngfs(raw: Option[DataFrame], prep: (DataFrame, Int) => DataFrame, vintage: String) =
       raw.map { r =>
         val base = prep(r, in.startYear)
@@ -200,9 +201,7 @@ object RunWorkflow {
         // :263-270 — IPR power prices reuse the WEO2021 power LCOE input
         Prices.prepareLcoeAdjustedPriceDataIpr2023(
           Prices.preparePriceDataLongPowerIpr2023(in.powerLcoeWide),
-          v.averageNpmPower, in.startYear).drop("source"),
-        // :274 — IPR baseline clones the adjusted WEO2021 STEPS path
-        Prices.preparePriceDataLongIpr2023Baseline(adjWeo2021)))
+          v.averageNpmPower, in.startYear).drop("source")))
     }
     val weo2023 = (v.weo2023FossilFuelPrices, v.weo2023PowerLcoe) match {
       case (Some(f), Some(p)) =>

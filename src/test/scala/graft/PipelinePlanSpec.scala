@@ -30,6 +30,46 @@ class PipelinePlanSpec extends SparkTestBase {
       val leaves = df.queryExecution.logical.collectLeaves().filter(_.isInstanceOf[LogicalRDD])
       assert(leaves.isEmpty, s"$name built a checkpoint leaf:\n${df.queryExecution.logical}")
     }
+    // the price preps read each frame once, so only Oxford's OLS extension
+    // keeps a junction; a barrier persists its checkpoint, so count the RDDs
+    // each construction pinned
+    val fossil = Seq(("WEO2021", "Coal", "usd/tonnes", "EU", "SDS", 60.0, 40.0),
+        ("WEO2021", "Coal", "usd/tonnes", "US", "SDS", 80.0, 60.0))
+      .toDF("source", "sector", "unit", "scenario_geography", "scenario", "2020", "2030")
+    val power = Seq(("WEO2021", "SDS", "EU", "Gas CCGT", "LCOE", "usd/MWh", 70.0, 50.0),
+        ("WEO2021", "SDS", "US", "Gas CCGT", "LCOE", "usd/MWh", 60.0, 40.0))
+      .toDF("source", "scenario", "region", "technology", "indicator", "unit", "2020", "2030")
+    val ipr = Seq(("FPS", "Europe", "USD", "high price", "Natural gas", 2030, 8.0),
+        ("FPS", "Europe", "USD", "price", "Coal", 2030, 80.0))
+      .toDF("Scenario", "Region", "Units", "Variable_class", "Sub_variable_class_1",
+        "year", "value")
+    val lcoe = Seq(("W", "SDS", "Global", "Power", "GasCap", "LCOE", "u", 2021, 60.0),
+        ("W", "SDS", "Global", "Power", "GasCap", "LCOE", "u", 2030, 30.0))
+      .toDF("source", "scenario", "scenario_geography", "sector", "technology",
+        "indicator", "unit", "year", "price")
+    val oxford = (2021 to 2069).map(y => ("Power", "Oxford - fast_transition", "World",
+        "Natural gas", null: String, y, 60.0 - 0.1 * (y - 2021)))
+      .toDF("Sector", "Scenario", "Region", "Technology", "Sub_Technology", "Year", "LCOE")
+    def pins(build: => DataFrame): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      build
+      val pinned = spark.sparkContext.getPersistentRDDs -- before
+      pinned.values.foreach(_.unpersist())
+      pinned.size
+    }
+    val counts = Seq(
+      "preparePriceDataLongWeo2021" -> pins(Prices.preparePriceDataLongWeo2021(fossil, power)),
+      "preparePriceDataLongPowerIpr2023" -> pins(Prices.preparePriceDataLongPowerIpr2023(power)),
+      "preparePriceDataLongIpr2023" -> pins(Prices.preparePriceDataLongIpr2023(ipr, 2025)),
+      "lcoeAdjustedPrices" -> pins(Prices.lcoeAdjustedPrices(lcoe, 0.1, 2021)),
+      "prepareLcoeAdjustedPriceDataIpr2023" ->
+        pins(Prices.prepareLcoeAdjustedPriceDataIpr2023(lcoe, 0.1, 2021)),
+      "prepareLcAdjustedPriceDataSteel" -> pins(Prices.prepareLcAdjustedPriceDataSteel(
+        Prices.mpLcSteelWrangling(lc), 0.07, 2025)),
+      "prepareLcoeAdjustedPriceDataOxford2022" ->
+        pins(Prices.prepareLcoeAdjustedPriceDataOxford2022(oxford, 0.1, 2021, "2023")))
+    assert(counts.toMap == counts.map { case (name, _) =>
+      name -> (if (name == "prepareLcoeAdjustedPriceDataOxford2022") 1 else 0) }.toMap)
   }
 
   test("abcd builds without a checkpoint leaf; financial pins exactly one") {
@@ -115,15 +155,19 @@ class PipelinePlanSpec extends SparkTestBase {
     assert(n == 1, s"tmsr+smsp must cost exactly 1 shuffle, got $n:\n${plan(out)}")
   }
 
-  test("implied-price adjustment broadcasts the 1-row-per-group implied side") {
+  test("implied-price adjustment reads its input once through one partitioning") {
     val lcoe = Seq(
       ("W", "SDS", "Global", "Power", "GasCap", "LCOE", "u", 2021, 60.0),
-      ("W", "SDS", "Global", "Power", "GasCap", "LCOE", "u", 2030, 30.0))
+      ("W", "SDS", "Global", "Power", "GasCap", "LCOE", "u", 2030, 30.0),
+      ("W", "SDS", "Global", "Coal", "Coal", "price", "u", 2021, 50.0))
       .toDF("source", "scenario", "scenario_geography", "sector", "technology",
         "indicator", "unit", "year", "price")
     val out = Prices.lcoeAdjustedPrices(lcoe, averageNpmPower = 0.1, startYear = 2021)
-    assert(plan(out).contains("BroadcastHashJoin"),
-      s"implied price must broadcast back onto the series:\n${plan(out)}")
+    val leaves = out.queryExecution.logical.collectLeaves().size
+    assert(leaves == 1, s"read its input $leaves times:\n${out.queryExecution.logical}")
+    val n = exchanges(out)
+    assert(n == 1, s"the anchors and the cost factor share one window, got $n:\n${plan(out)}")
+    assert(!plan(out).contains("BroadcastHashJoin"), plan(out))
   }
 
   test("technology-type aggregation is a single hash aggregate pass") {
