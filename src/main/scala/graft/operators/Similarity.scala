@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFns
+import graft.core.Barriers.BarrierOps
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -727,13 +728,13 @@ object Similarity {
           "compactIvfCellsSnapshot, which publishes a new version instead of " +
           "deleting files under pinned readers")
       requireNoInflightAppend(spark, path)
-      // localCheckpoint breaks the read lineage: Spark refuses to
+      // the barrier breaks the read lineage: Spark refuses to
       // overwrite a path it is also reading, and the rewrite must see a
       // materialized snapshot anyway (cell-sized — the compaction batch,
       // not the index)
       val snapshot = spark.read.parquet(path)
         .filter(col("cell").isin(cells: _*))
-        .localCheckpoint(true)
+        .planBarrier()
       snapshot
         .repartition(cells.size, col("cell"))
         .write.mode("overwrite")
@@ -766,7 +767,7 @@ object Similarity {
       requireNoInflightAppend(spark, path)
       val snapshot = indexScan(spark, path)
         .filter(col("cell").isin(cells: _*))
-        .localCheckpoint(true)
+        .planBarrier()
       graft.core.Snapshots.publishPartitions(spark, path) { stage =>
         snapshot.repartition(cells.size, col("cell"))
           .write.partitionBy("cell").parquet(stage)
@@ -992,7 +993,7 @@ object Similarity {
       // a legacy plain read materializes first, same as compaction
       val rows0 = prevV
         .map(v => graft.core.Snapshots.readSnapshot(spark, path, Some(v)))
-        .getOrElse(spark.read.parquet(path).localCheckpoint(true))
+        .getOrElse(spark.read.parquet(path).planBarrier())
         .drop("cell")
       val newCents = trainCodebook(rows0, id, vec, nCells, trainIters, sampleMod)
       // codebook-to-version binding is ATOMIC with the data commit: the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Barriers.BarrierOps
 
 /** Distributed statistics operators with engine-exact (oracle-replayable)
   * semantics: every reduction is either integer/decimal-exact or a
@@ -626,7 +627,7 @@ object Stats {
     // checkpointed set is |distinct scores| rows, never the corpus
     val perValue = partials
       .groupBy(col("v")).agg(sum(col("cp")).as("cp"), sum(col("cn")).as("cn"))
-      .localCheckpoint(true)
+      .planBarrier()
     val m = perValue.agg(min(col("v")), max(col("v"))).head()
     require(!m.isNullAt(0), "rocAuc: empty input")
     val bucketed = perValue.withColumn("b", rangeBucket("v", m.getLong(0), m.getLong(1), buckets))
@@ -692,7 +693,7 @@ object Stats {
     require(buckets > 0, "buckets must be positive")
     val perValue = partials
       .groupBy(col("v")).agg(sum(col("cp")).as("cp"), sum(col("cn")).as("cn"))
-      .localCheckpoint(true)
+      .planBarrier()
     val m = perValue.agg(min(col("v")), max(col("v"))).head()
     require(!m.isNullAt(0), "prCurve: empty input")
     val bucketed = perValue.withColumn("b",
@@ -764,7 +765,7 @@ object Stats {
     val perValue = v.groupBy(col("v")).agg(
       sum(when(col("s") === sideA, 1L).otherwise(0L)).as("ca"),
       sum(when(col("s") === sideB, 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint(true)
+      .planBarrier()
     val m = perValue.agg(min(col("v")), max(col("v"))).head()
     require(!m.isNullAt(0), "ksTest: no rows on either side")
     val bucketed = perValue.withColumn("b", rangeBucket("v", m.getLong(0), m.getLong(1), buckets))

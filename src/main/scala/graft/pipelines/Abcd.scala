@@ -182,7 +182,7 @@ object Abcd {
 
     // reference :423 — result must have no duplicate rows; cached so the
     // uniqueness action materializes the frame the caller consumes
-    abcd = abcd.cache()
+    abcd = graft.core.Barriers.stageCache(abcd, "abcd")
     DataChecks.assertUniqueKeys(abcd, abcd.columns.toSeq)
     abcd
   }

@@ -253,7 +253,7 @@ object Financial {
     // reference :600-603 — nothing may be null. The stage output is cached
     // (its caller reads it more than once), so the assertion action
     // materializes the frame the caller consumes
-    out = out.cache()
+    out = graft.core.Barriers.stageCache(out, "financial")
     DataChecks.assertAll(out, Seq(DataChecks.notNullCheck(out.columns.toSeq)))
     withAvg.assertClean()
     out

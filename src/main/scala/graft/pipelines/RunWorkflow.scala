@@ -72,20 +72,23 @@ object RunWorkflow {
     * branch reuse is free in eager R but recomputes the subtree in lazy
     * Spark):
     *  - a frame that several consumers read INSIDE a stage is an eager
-    *    [[graft.core.Barriers.barrier]] checkpoint leaf (a frame with one
-    *    consumer is neither barriered nor cached; a fan-out is one
-    *    [[graft.ops.Reshape.fanOut]] generator, so its input has one
-    *    consumer and is not a junction);
+    *    [[graft.core.Barriers.barrier]] leaf over compressed columnar
+    *    batches (a frame with one consumer is neither barriered nor cached;
+    *    a fan-out is one [[graft.ops.Reshape.fanOut]] generator, so its
+    *    input has one consumer and is not a junction);
     *  - a stage OUTPUT that its caller reads more than once is cached by
-    *    that stage, and `run()` lists it in `cachedFrames`.
+    *    that stage ([[graft.core.Barriers.stageCache]], named after the
+    *    stage), and `run()` lists it in `cachedFrames`.
     * `run()` itself calls neither. Its cached stage outputs are the merged
     * scenario frame, abcd and the prepared financials; they stay pinned
     * for the session so the CALLER can still consume every output without
     * recomputation. A long-lived session running the workflow repeatedly
     * must call [[Outputs.unpersistAll]] after its writes, which releases
-    * every cache entry the run registered. Checkpoint leaves are not cache
+    * every cache entry the run registered. In `getRDDStorageInfo` a run's
+    * blocks are either "In-memory table <stage>" (these entries) or
+    * "graft junction" (barrier leaves). Barrier leaves are not cache
     * entries; the context cleaner drops their blocks once they are
-    * unreachable.
+    * unreachable, and unpersisting the persistent RDDs drops them at once.
     */
   final case class Outputs(
       carbonPrice: DataFrame,
@@ -128,7 +131,12 @@ object RunWorkflow {
     * ONE physical plan with >150 whole-stage-codegen units whose task
     * binary serializes at ~176 MiB per stage (measured on the real-data
     * run, r15) — per-leg materialization bounds any single job's plan to
-    * one vintage's tail.
+    * one vintage's tail. A leg must not itself be a bindRows: its legs are
+    * pinned, and then their union is pinned again. On wf_toy, flattening
+    * the price merge's nested NGFS + Oxford and IPR fossil + power unions
+    * into legs of the one merge cut the "Broadcasting large task binary"
+    * warnings (above 1 MiB) of one traced run from 19, the largest two
+    * 8.3 MiB, to 5, the largest 2.1 MiB.
     */
   private def bindRows(parts: Seq[DataFrame]): DataFrame =
     graft.core.Barriers.barrierAll(parts)
@@ -177,7 +185,7 @@ object RunWorkflow {
     * reference filters to Global at write time (price data carries no
     * geography resolution).
     */
-  private def mergePriceVintages(
+  private[graft] def mergePriceVintages(
       in: Inputs, v: VintageInputs): DataFrame = {
     val weo2021 = adjustedWeoPrices(
       in.fossilFuelPricesWide, in.powerLcoeWide, "WEO2021", v.averageNpmPower, in.startYear)
@@ -187,21 +195,22 @@ object RunWorkflow {
       if (v.ipr2023FossilPrices.isEmpty) weo2021
       else Reshape.fanOut(weo2021, "scenario",
         Map("WEO2021_STEPS" -> Seq("WEO2021_STEPS", "IPR2023_baseline")))
+    // each NGFS base and its Oxford LCOE prices, and the IPR fossil and
+    // power prices, are separate legs of the one merge: a nested bindRows
+    // would pin both legs and then pin their union again
     def ngfs(raw: Option[DataFrame], prep: (DataFrame, Int) => DataFrame, vintage: String) =
-      raw.map { r =>
-        val base = prep(r, in.startYear)
-        v.oxfordLcoe.map(lcoe => bindRows(Seq(base,
-            Prices.prepareLcoeAdjustedPriceDataOxford2022(
-              lcoe, v.averageNpmPower, in.startYear, vintage))))
-          .getOrElse(base)
+      raw.toSeq.flatMap { r =>
+        prep(r, in.startYear) +: v.oxfordLcoe.toSeq.map(lcoe =>
+          Prices.prepareLcoeAdjustedPriceDataOxford2022(
+            lcoe, v.averageNpmPower, in.startYear, vintage))
       }
-    val ipr = v.ipr2023FossilPrices.map { raw =>
-      bindRows(Seq(
+    val ipr = v.ipr2023FossilPrices.toSeq.flatMap { raw =>
+      Seq(
         Prices.preparePriceDataLongIpr2023(raw, in.startYear),
         // :263-270 — IPR power prices reuse the WEO2021 power LCOE input
         Prices.prepareLcoeAdjustedPriceDataIpr2023(
           Prices.preparePriceDataLongPowerIpr2023(in.powerLcoeWide),
-          v.averageNpmPower, in.startYear).drop("source")))
+          v.averageNpmPower, in.startYear).drop("source"))
     }
     val weo2023 = (v.weo2023FossilFuelPrices, v.weo2023PowerLcoe) match {
       case (Some(f), Some(p)) =>
@@ -211,18 +220,15 @@ object RunWorkflow {
         "WEO2023 prices need BOTH weo2023FossilFuelPrices and weo2023PowerLcoe; " +
           "got exactly one — refusing to silently drop the vintage")
     }
-    bindRows(Seq(
-      Some(adjWeo2021),
-      weo2023,
-      ngfs(v.ngfs2023FossilPrices, Prices.preparePriceDataLongNgfs2023, "2023"),
-      ngfs(v.ngfs2024FossilPrices, Prices.preparePriceDataLongNgfs2024, "2024"),
-      ipr,
-      v.oxf2021FossilPrices.map(Prices.preparePriceDataLongOxf2021(_, in.startYear)),
+    val legs = Seq(adjWeo2021) ++ weo2023 ++
+      ngfs(v.ngfs2023FossilPrices, Prices.preparePriceDataLongNgfs2023, "2023") ++
+      ngfs(v.ngfs2024FossilPrices, Prices.preparePriceDataLongNgfs2024, "2024") ++ ipr ++
+      v.oxf2021FossilPrices.map(Prices.preparePriceDataLongOxf2021(_, in.startYear)) ++
       v.steelLevelizedCost.map(raw => Prices.prepareLcAdjustedPriceDataSteel(
         Prices.mpLcSteelWrangling(raw), v.steelNpm, in.startYear))
-    ).flatten)
-      // :360 — price data is written Global-only
-      .filter(col("scenario_geography") === "Global")
+    // :360 — price data is written Global-only; each leg is filtered before
+    // its barrier, so only the rows the merge writes are pinned
+    bindRows(legs.map(_.filter(col("scenario_geography") === "Global")))
   }
 
   def run(spark: SparkSession, in: Inputs): Outputs = {

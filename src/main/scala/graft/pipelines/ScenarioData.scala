@@ -731,10 +731,9 @@ object ScenarioData {
     // Cached BEFORE the eager orphan collect so the 8-vintage union is
     // materialized once for the check AND for every downstream consumer
     // (automotive prices, alignment, writes).
-    val typed = combined.withColumn("scenario_type",
+    val typed = graft.core.Barriers.stageCache(combined.withColumn("scenario_type",
       when(col("scenario").isin(baselineScenarios: _*), "baseline")
-        .when(col("scenario").isin(shockScenarios: _*), "shock"))
-      .cache()
+        .when(col("scenario").isin(shockScenarios: _*), "shock")), "scenarios")
     val orphans = typed.filter(col("scenario_type").isNull)
       .select("scenario").distinct().limit(20).collect().map(_.getString(0))
     if (orphans.nonEmpty)

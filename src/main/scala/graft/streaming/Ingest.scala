@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Barriers.BarrierOps
 
 /** Streaming document ingestion — the continuous counterpart of the batch
   * incremental dedup (graft.operators.Dedup.exactIndex /
@@ -385,7 +386,7 @@ object Ingest {
     val merged = existing.fold(stamped)(_.unionByName(stamped))
       // the publish stages from this plan while older generations stay
       // readable — materialize so the rewrite sees a fixed row set
-      .localCheckpoint(true)
+      .planBarrier()
     graft.core.Snapshots.publishPartitions(spark, targetPath) { stage =>
       merged.write.partitionBy(partitionCol).parquet(stage)
     }

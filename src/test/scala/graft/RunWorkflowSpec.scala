@@ -1,6 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.pipelines.RunWorkflow
 
@@ -156,31 +158,33 @@ class RunWorkflowSpec extends SparkTestBase with org.scalatest.BeforeAndAfterEac
     ("World", "CN"), ("Europe", "IT"), ("EU", "GB"))
     .toDF("scenario_geography", "country_iso")
 
+  /** Every capacity-factor and price vintage, bench regions, no scenarios. */
+  private def vintageInputs = RunWorkflow.Inputs(
+    ngfsCarbonPriceWide = ngfsWide,
+    weoCapacityFactorsWide = weoWide,
+    fossilFuelPricesWide = fossilWide,
+    powerLcoeWide = powerWide,
+    companyActivities = SyntheticData.companyActivities(spark, nCompanies = 10),
+    companyEmissions = SyntheticData.companyEmissions(spark, nCompanies = 10),
+    eikonFinancials = SyntheticData.eikonFinancials(spark, nCompanies = 10),
+    companyIds = None,
+    ownershipTree = None,
+    scenarios = None,
+    vintages = Some(RunWorkflow.VintageInputs(
+      weo2023CapacityFactors = Some(weo2023Cf),
+      ngfs2023CapacityFactors = Some(ngfs2023Cf),
+      ipr2023CapacityFactors = Some(ipr2023Cf),
+      gemSteelCapacityFactors = Some(gemSteelCf),
+      ngfs2023FossilPrices = Some(ngfs2023Prices),
+      oxfordLcoe = Some(oxfordLcoe),
+      ipr2023FossilPrices = Some(ipr2023Prices),
+      oxf2021FossilPrices = Some(oxf2021Prices),
+      steelLevelizedCost = Some(steelLc))),
+    benchRegions = Some(benchRegions),
+    startYear = 2022, timeHorizon = 5)
+
   test("run with multi-vintage inputs: CF/price union, Global filter, geography stage") {
-    val activities = SyntheticData.companyActivities(spark, nCompanies = 10)
-    val out = RunWorkflow.run(spark, RunWorkflow.Inputs(
-      ngfsCarbonPriceWide = ngfsWide,
-      weoCapacityFactorsWide = weoWide,
-      fossilFuelPricesWide = fossilWide,
-      powerLcoeWide = powerWide,
-      companyActivities = activities,
-      companyEmissions = SyntheticData.companyEmissions(spark, nCompanies = 10),
-      eikonFinancials = SyntheticData.eikonFinancials(spark, nCompanies = 10),
-      companyIds = None,
-      ownershipTree = None,
-      scenarios = None,
-      vintages = Some(RunWorkflow.VintageInputs(
-        weo2023CapacityFactors = Some(weo2023Cf),
-        ngfs2023CapacityFactors = Some(ngfs2023Cf),
-        ipr2023CapacityFactors = Some(ipr2023Cf),
-        gemSteelCapacityFactors = Some(gemSteelCf),
-        ngfs2023FossilPrices = Some(ngfs2023Prices),
-        oxfordLcoe = Some(oxfordLcoe),
-        ipr2023FossilPrices = Some(ipr2023Prices),
-        oxf2021FossilPrices = Some(oxf2021Prices),
-        steelLevelizedCost = Some(steelLc))),
-      benchRegions = Some(benchRegions),
-      startYear = 2022, timeHorizon = 5))
+    val out = RunWorkflow.run(spark, vintageInputs)
 
     // every supplied capacity-factor vintage lands in the union, plus the
     // OXF2021 relabel derived from WEO2021 (reference combine :175-183)
@@ -219,6 +223,61 @@ class RunWorkflowSpec extends SparkTestBase with org.scalatest.BeforeAndAfterEac
         graft.core.DataChecks.betweenCheck("price", 0.0, Double.MaxValue)))
     pChecked.df.write.format("noop").mode("overwrite").save()
     pChecked.assertClean()
+  }
+
+  /** Ids of the persisted RDDs that the jobs of `body` read or wrote. A
+    * listener sees every one, including a junction the context cleaner
+    * has already released by the time `body` returns.
+    */
+  private def persistedBy(body: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        for (s <- e.stageInfos; r <- s.rddInfos if r.storageLevel.isValid) ids.add(r.id)
+    }
+    val first = sc.emptyRDD[Int].id
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    ids.asScala.toSet.filter(_ > first)
+  }
+
+  test("the price merge pins each leg once, and only its Global rows") {
+    val in = vintageInputs
+    val v = in.vintages.get
+    // the Oxford prep keeps one junction of its own (PipelinePlanSpec)
+    val oxfordJunctions = persistedBy(graft.pipelines.Prices.prepareLcoeAdjustedPriceDataOxford2022(
+      v.oxfordLcoe.get, v.averageNpmPower, in.startYear, "2023")).size
+    var merged: DataFrame = null
+    val pinned = persistedBy { merged = RunWorkflow.mergePriceVintages(in, v) }
+    // WEO2021, NGFS2023, its Oxford prices, IPR fossil, IPR power, OXF2021
+    // and steel: seven legs, each a leaf of the union
+    val legs = merged.queryExecution.logical.collectLeaves()
+    assert(legs.size == 7 && legs.forall(_.isInstanceOf[LogicalRDD]),
+      s"every leg should be a leaf of the merge:\n${merged.queryExecution.logical}")
+    assert(pinned.size == legs.size + oxfordJunctions,
+      s"${pinned.size} RDDs pinned for ${legs.size} legs and $oxfordJunctions Oxford junction")
+    assert(merged.filter(col("scenario_geography") =!= "Global").isEmpty)
+  }
+
+  test("a run pins nothing but named junctions and stage caches") {
+    val sc = spark.sparkContext
+    val first = sc.emptyRDD[Int].id
+    val out = RunWorkflow.run(spark, vintageInputs)
+    try {
+      for (df <- Seq(out.carbonPrice, out.capacityFactors, out.prices, out.abcd, out.financial))
+        df.write.format("noop").mode("overwrite").save()
+      val left = sc.getRDDStorageInfo.filter(_.id > first)
+      assert(left.exists(_.name == "graft junction"))
+      assert(left.exists(_.name.startsWith("In-memory table")))
+      val other = left.filterNot(i => i.name == "graft junction" ||
+        i.name.startsWith("In-memory table"))
+      assert(other.isEmpty, "pinned outside the junction primitive and the stage caches: " +
+        other.map(i => s"${i.id} ${i.name}").mkString("; "))
+    } finally out.unpersistAll()
   }
 
   /** Every stage that feeds the TRISK-v2 frames: scenarios, bench regions,
